@@ -783,11 +783,9 @@ def _q_ann_lsh_knn(spark, sf_dir):
     """LSH-bucketed kNN: candidates share an integer hyperplane-signature
     bucket, exact cosine re-rank inside — the scale path where label
     blocks don't exist (bucket = the shuffle key)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    bucketed = int_hyperplane_signature(emb, n_planes=8, dim=DIM)
-    res = similarity.knn_within_blocks(
-        bucketed, k=1, block_col="lsh_bucket",
-        query_filter=(F.col("id") % 25 == 0), dim=DIM,
+    res = similarity.lsh_bucket_ann(
+        _t(spark, sf_dir, "embeddings"), k=1, n_planes=8, dim=DIM,
+        query_filter=(F.col("id") % 25 == 0),
     )
     return res.select(
         F.col("q").cast("long"),

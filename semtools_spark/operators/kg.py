@@ -13,8 +13,8 @@ Stages (all DataFrame-native; pandas UDFs only at the embedding boundary):
      brute-force cosine scan, search/mod.rs:77-120, generalized from 1
      query to M mentions). The catalog is small (≤10^6 entities × 256
      floats = 1 GB ceiling; ours far less) — broadcast, never shuffled.
-     An LSH-bucketed variant (semtools_spark.operators.similarity) bounds
-     the per-row work when the catalog outgrows broadcast.
+     An LSH-bucketed variant (_link_entities_lsh, below) bounds the
+     per-row work when the catalog outgrows broadcast.
   3. connected_components: canonicalize co-referring surface forms with the
      alternating large-star/small-star algorithm (Kiveris et al.,
      "Connected Components in MapReduce and Beyond", public) — O(log n)
@@ -168,6 +168,47 @@ LINK_OUT_T = T.StructType(
     ]
 )
 
+#: distinct-mention count up to which link_entities scores on the driver
+#: instead of through the broadcast pandas UDF
+DRIVER_LINK_BELOW = 8192
+
+
+def _unit_catalog(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, matn) from an (entity_id, embedding) frame: rows in stable
+    ``entity_id`` order, embeddings L2-normalized float32 (zero rows stay
+    zero). The id order is the tie rule — :func:`_top1` takes the first
+    maximum, so an exact tie links to the lowest ``entity_id``, as the
+    LSH tier's ``min_by`` over (distance, entity_id) does."""
+    ids = np.asarray(pdf["entity_id"], dtype=np.int64)
+    order = np.argsort(ids, kind="stable")
+    emb = pdf["embedding"].tolist()
+    mat = np.stack([np.asarray(emb[i], dtype=np.float32) for i in order])
+    norms = np.linalg.norm(mat, axis=1)
+    norms[norms == 0] = 1.0
+    return ids[order], (mat / norms[:, None]).astype(np.float32)
+
+
+def _top1(q: np.ndarray, matn: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Cosine top-1 of each normalized query row against ``matn``: ONE
+    float32 matmul + argmax, returning (row index, float64 distance)."""
+    sims = q @ matn.T  # (n, |catalog|)
+    best = sims.argmax(axis=1)
+    return best, 1.0 - sims[np.arange(len(q)), best].astype(np.float64)
+
+
+def _plane_buckets(mat: np.ndarray, w: np.ndarray, n_probes: int) -> np.ndarray:
+    """(n, 1 + n_probes) int64 hyperplane buckets: column 0 is the exact
+    signature of similarity.int_hyperplane_signature (floor(1e6·x) on the
+    float64-widened embedding, exact int64 ±1 dot, sign bits), then the
+    signature with each of the ``n_probes`` lowest-|dot| bits flipped, in
+    (|dot|, plane) order — multi-probe LSH (Lv et al., VLDB'07)."""
+    f = np.floor(np.asarray(mat, dtype=np.float64) * 1000000.0).astype(np.int64)
+    dots = f @ w.T  # exact int64
+    base = ((dots > 0) * (1 << np.arange(w.shape[0], dtype=np.int64))).sum(axis=1)
+    order = np.argsort(np.abs(dots), axis=1, kind="stable")[:, :n_probes]
+    flips = base[:, None] ^ (np.int64(1) << order.astype(np.int64))
+    return np.concatenate([base[:, None], flips], axis=1)
+
 
 def _make_link_udf(bc, dim: int, seed: int):
     """Pandas UDF scoring mention batches against the BROADCAST catalog.
@@ -184,10 +225,7 @@ def _make_link_udf(bc, dim: int, seed: int):
         ids, matn = bc.value
         embedder = HashEmbedder(dim=dim, seed=seed)
         for s in batches:
-            q = embedder.embed_texts(s.fillna("").tolist())  # (n, dim), normalized
-            sims = q @ matn.T  # (n, |catalog|)
-            best = sims.argmax(axis=1)
-            dist = 1.0 - sims[np.arange(len(s)), best].astype(np.float64)
+            best, dist = _top1(embedder.embed_texts(s.fillna("").tolist()), matn)
             yield pd.DataFrame({"entity_id": ids[best], "link_distance": dist})
 
     # asNondeterministic (guide §4.4): a max_distance filter over the
@@ -208,42 +246,49 @@ def link_entities(
     max_distance: float | None = None,
     use_lsh_above: int | None = None,
     catalog_size: int | None = None,
-    driver_link_below: int = 8192,
 ) -> DataFrame:
     """Cosine top-1 link of each distinct mention surface form against the
     catalog — the M-query generalization of the reference's brute-force
-    scan (search/mod.rs:77-120), per Arrow batch ONE matmul + argmin.
+    scan (search/mod.rs:77-120): per batch ONE float32 matmul + argmax
+    (:func:`_top1`) against the normalized catalog.
 
-    Two physical strategies:
+    Three physical strategies:
 
-    * **broadcast** (default): the L2-normalized catalog matrix ships to
-      executors via ``SparkContext.broadcast`` — once per executor, never
-      per task — and each batch scores against all of it. Exact; right
-      while the catalog fits executor memory (≲1 GB).
+    * **driver** (default while the distinct mentions number at most
+      ``DRIVER_LINK_BELOW``): the mentions are collected and scored
+      in-process — no Python workers in the plan.
+    * **broadcast** (larger mention sets): the normalized catalog matrix
+      ships to executors via ``SparkContext.broadcast`` — once per
+      executor, never per task — and each batch scores against all of
+      it. Exact; right while the catalog fits executor memory (≲1 GB).
+      Scores are identical to the driver tier's.
     * **LSH-bucketed** (``use_lsh_above=n``: engaged when the catalog
       exceeds n rows): mentions and catalog are embedded, signed into
-      integer hyperplane buckets (similarity.int_hyperplane_signature),
-      candidates joined WITHIN bucket with exact cosine re-rank — the
-      shuffle key is the bucket, never all-pairs. Mentions whose bucket
-      holds no catalog entry fall back to an exact distributed
-      cross-score (few rows × catalog, windowed top-1) so every mention
-      still links. Exact surface-form matches always collide (identical
-      vector ⇒ identical signature).
+      integer hyperplane buckets (:func:`_plane_buckets`, bit-identical
+      to similarity.int_hyperplane_signature), candidates joined WITHIN
+      bucket with exact cosine re-rank — the shuffle key is the bucket,
+      never all-pairs. Mentions whose buckets hold no catalog entry fall
+      back to a bounded rescue sample so every mention still links.
+      Exact surface-form matches always collide (identical vector ⇒
+      identical signature).
+
+    Tie rule, every tier: an exact distance tie links to the lowest
+    ``entity_id``.
 
     Returns (mention, entity_id, link_distance, rescued). ``rescued`` is
-    False everywhere on the broadcast path (it is exact); on the LSH path
-    it marks links produced by the bounded best-effort rescue tier —
-    approximate by construction, so quality-sensitive callers threshold
-    them (``max_distance`` applies to rescue rows like any other).
-    Distinct mentions are linked once, then the (small) mapping can be
+    False everywhere on the exact tiers; on the LSH path it marks links
+    produced by the bounded best-effort rescue tier — approximate by
+    construction, so quality-sensitive callers threshold them
+    (``max_distance`` applies to rescue rows like any other). Distinct
+    mentions are linked once, then the (small) mapping can be
     broadcast-joined back to the full mention stream by the caller.
 
     ``catalog_size`` (optional) is a known-row-count hint that skips the
     strategy-picking ``count()`` job when ``use_lsh_above`` is set —
     callers that just built the catalog know its size.
 
-    The broadcast path attaches its Broadcast handle to the returned
-    DataFrame as ``_semtools_broadcasts``; callers that materialize the
+    The returned DataFrame carries its Broadcast handles (none on the
+    driver tier) as ``_semtools_broadcasts``; callers that materialize the
     result (e.g. the pipeline stage write) should ``unpersist()`` those to
     release executor blocks in long-lived sessions (a later re-evaluation
     lazily re-broadcasts, so unpersist is always safe).
@@ -260,14 +305,9 @@ def link_entities(
             distinct_m, catalog, dim=dim, seed=seed,
             catalog_size=(catalog_size if catalog_size is not None else n_cat),
         )
-        broadcasts = getattr(linked, "_semtools_broadcasts", [])
+        broadcasts = linked._semtools_broadcasts
     else:
-        pdf = catalog.select("entity_id", "embedding").toPandas()
-        ids = np.asarray(pdf["entity_id"], dtype=np.int64)
-        mat = np.stack([np.asarray(v, dtype=np.float32) for v in pdf["embedding"]])
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0] = 1.0
-        matn = (mat / norms[:, None]).astype(np.float32)
+        ids, matn = _unit_catalog(catalog.select("entity_id", "embedding").toPandas())
         # Adaptive driver link (the connected_components small-graph
         # philosophy applied here): when the DISTINCT surface-form set is
         # small — bounded extraction vocabularies, early corpus slices —
@@ -275,52 +315,34 @@ def link_entities(
         # removes the whole Python-worker machinery from the plan (the
         # first pandas-UDF job of a session forks + imports numpy/pandas
         # in every worker: measured ~3 s of the flagship pipeline's link
-        # stage, guide §4). Bit-identical to the UDF path: same embedder,
-        # same float32 matmul per row (row results are independent of
-        # batching), same argmax tie-break and float64 distance. The
-        # bounded ``limit(n+1)`` probe decides without a full count; web-
-        # scale mention sets exceed it and take the broadcast-UDF path.
-        probe = (
-            distinct_m.limit(driver_link_below + 1).collect()
-            if driver_link_below and driver_link_below > 0
-            else None
-        )
-        if probe is not None and len(probe) <= driver_link_below:
-            embedder = HashEmbedder(dim=dim, seed=seed)
+        # stage, guide §4). The bounded ``limit(n+1)`` probe decides
+        # without a full count; web-scale mention sets exceed it and take
+        # the broadcast-UDF path.
+        probe = distinct_m.limit(DRIVER_LINK_BELOW + 1).collect()
+        if len(probe) <= DRIVER_LINK_BELOW:
             texts = [r.mention if r.mention is not None else "" for r in probe]
-            q = embedder.embed_texts(texts)
-            sims = q @ matn.T
-            best = sims.argmax(axis=1)
-            dist = 1.0 - sims[np.arange(len(texts)), best].astype(np.float64)
-            schema = T.StructType(
-                [
-                    T.StructField("mention", T.StringType()),
-                    T.StructField("entity_id", T.LongType()),
-                    T.StructField("link_distance", T.DoubleType()),
-                    T.StructField("rescued", T.BooleanType(), False),
-                ]
-            )
+            q = HashEmbedder(dim=dim, seed=seed).embed_texts(texts)
+            best, dist = _top1(q, matn)
             linked = spark.createDataFrame(
                 [
                     (r.mention, int(ids[b]), float(d), False)
                     for r, b, d in zip(probe, best, dist)
                 ],
-                schema,
+                "mention string, entity_id bigint, link_distance double, "
+                "rescued boolean not null",
             )
-            linked._semtools_broadcasts = []
-            if max_distance is not None:
-                linked = linked.filter(F.col("link_distance") < float(max_distance))
-                linked._semtools_broadcasts = []
-            return linked
-        bc = spark.sparkContext.broadcast((ids, matn))
-        broadcasts = [bc]
-        _link = _make_link_udf(bc, dim, seed)
-        linked = distinct_m.withColumn("__l", _link(F.col("mention"))).select(
-            "mention",
-            F.col("__l.entity_id"),
-            F.col("__l.link_distance"),
-            F.lit(False).alias("rescued"),
-        )
+            broadcasts = []
+        else:
+            bc = spark.sparkContext.broadcast((ids, matn))
+            broadcasts = [bc]
+            linked = distinct_m.withColumn(
+                "__l", _make_link_udf(bc, dim, seed)(F.col("mention"))
+            ).select(
+                "mention",
+                F.col("__l.entity_id"),
+                F.col("__l.link_distance"),
+                F.lit(False).alias("rescued"),
+            )
     if max_distance is not None:
         linked = linked.filter(F.col("link_distance") < float(max_distance))
     linked._semtools_broadcasts = broadcasts
@@ -329,12 +351,8 @@ def link_entities(
 
 def _embed_probe_udf(dim: int, seed: int, n_planes: int, n_probes: int):
     """Fused mention → (embedding, probe_buckets) pandas UDF: ONE Python
-    boundary crossing instead of embed-UDF + a JVM multi-probe signature
-    pass (guide §4.2 — batch the custom math into vectorized NumPy).
-    Bit-identical to similarity.multi_probe_signatures: floor(1e6·x) on
-    the float64-widened float32 embedding is the same IEEE op either
-    side, the ±1-weight dot is exact int64, and the flip order
-    (|dot| asc, plane asc) matches the struct array_sort tie-break."""
+    boundary crossing instead of an embed UDF plus a separate signature
+    pass (guide §4.2 — batch the custom math into vectorized NumPy)."""
     from semtools_spark.operators.similarity import int_plane_weights
 
     w = int_plane_weights(n_planes, dim, seed)
@@ -348,20 +366,16 @@ def _embed_probe_udf(dim: int, seed: int, n_planes: int, n_probes: int):
     @F.pandas_udf(out_t)
     def _ep(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         embedder = HashEmbedder(dim=dim, seed=seed)
-        bits = 1 << np.arange(n_planes, dtype=np.int64)
         for s in batches:
             if len(s) == 0:
                 yield pd.DataFrame({"embedding": [], "probe_buckets": []})
                 continue
             mat = embedder.embed_texts(s.fillna("").tolist())  # (n, dim) f32
-            f = np.floor(mat.astype(np.float64) * 1000000.0).astype(np.int64)
-            dots = f @ w.T  # exact int64
-            base = ((dots > 0) * bits).sum(axis=1)
-            order = np.argsort(np.abs(dots), axis=1, kind="stable")[:, :n_probes]
-            flips = base[:, None] ^ (np.int64(1) << order.astype(np.int64))
-            buckets = np.concatenate([base[:, None], flips], axis=1)
             yield pd.DataFrame(
-                {"embedding": list(mat), "probe_buckets": list(buckets)}
+                {
+                    "embedding": list(mat),
+                    "probe_buckets": list(_plane_buckets(mat, w, n_probes)),
+                }
             )
 
     return _ep
@@ -369,7 +383,7 @@ def _embed_probe_udf(dim: int, seed: int, n_planes: int, n_probes: int):
 
 def _int_signature_udf(dim: int, seed: int, n_planes: int):
     """Arrow-vectorized twin of similarity.int_hyperplane_signature for
-    pre-embedded float32 arrays: floors → exact int64 ±1 dot → sign bits,
+    pre-embedded float32 arrays: :func:`_plane_buckets` with no probes,
     one NumPy matmul per batch (the JVM fold runs interpreted per element
     per plane — at n_planes·|catalog| scale that was the second-largest
     cost of the LSH link). Raises on a dim mismatch like _dim_guard."""
@@ -379,7 +393,6 @@ def _int_signature_udf(dim: int, seed: int, n_planes: int):
 
     @F.pandas_udf(T.LongType())
     def _sig(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        bits = 1 << np.arange(n_planes, dtype=np.int64)
         for s in batches:
             if len(s) == 0:
                 yield pd.Series([], dtype="int64")
@@ -395,8 +408,7 @@ def _int_signature_udf(dim: int, seed: int, n_planes: int):
                     f"expected embedding vectors of length {dim}, "
                     f"got length {mat.shape[1]}"
                 )
-            f = np.floor(mat * 1000000.0).astype(np.int64)
-            yield pd.Series(((f @ w.T > 0) * bits).sum(axis=1))
+            yield pd.Series(_plane_buckets(mat, w, 0)[:, 0])
 
     return _sig
 
@@ -568,13 +580,10 @@ def _link_entities_lsh(
         .limit(max_rescue_catalog)
         .toPandas()
     )
-    ids = np.asarray(sample["entity_id"], dtype=np.int64)
-    mat = np.stack([np.asarray(v, dtype=np.float32) for v in sample["embedding"]])
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0] = 1.0
-    bc = spark.sparkContext.broadcast((ids, (mat / norms[:, None]).astype(np.float32)))
-    _link = _make_link_udf(bc, dim, seed)
-    rescue = missed.withColumn("__l", _link(F.col("mention"))).select(
+    bc = spark.sparkContext.broadcast(_unit_catalog(sample))
+    rescue = missed.withColumn(
+        "__l", _make_link_udf(bc, dim, seed)(F.col("mention"))
+    ).select(
         "mention",
         F.col("__l.entity_id"),
         F.col("__l.link_distance"),

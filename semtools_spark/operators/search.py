@@ -30,7 +30,6 @@ unspecified (search/mod.rs:107-111); we pin them for determinism.
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -280,28 +279,3 @@ def read_range(
             F.expr("transform(array_sort(collect_list(struct(line_no, line))), x -> x.line)"),
         ).alias("content"),
     )
-
-
-def search_embeddings(
-    emb: DataFrame,
-    query_vec: np.ndarray,
-    *,
-    top_k: int = DEFAULT_TOP_K,
-    max_distance: float | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """S5-S9 over a pre-embedded table (array<float> column), scoring
-    JVM-side via a sequential-fold cosine (stays in whole-stage codegen —
-    no Python boundary at all for this variant)."""
-    from semtools_spark.functions.vectors import cosine_distance_expr, vector_literal
-
-    scored = emb.withColumn("__q", vector_literal(query_vec)).select(
-        F.col(id_col),
-        cosine_distance_expr(vec_col, "__q", dim=len(query_vec)).alias("distance"),
-    )
-    if max_distance is not None:
-        return scored.filter(F.col("distance") < float(max_distance)).orderBy(
-            "distance", id_col
-        )
-    return scored.orderBy("distance", id_col).limit(top_k)

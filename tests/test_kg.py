@@ -359,6 +359,89 @@ def test_link_entities_lsh_path(spark):
         assert brute[m] == got[m][0]
 
 
+def _catalog_from(spark, rows, rescale=False):
+    """(entity_id, name) rows → catalog DataFrame in the given row order,
+    embedded with the link's model; ``rescale`` multiplies each vector by
+    a factor seeded from its name (cosine-invariant, so only the catalog
+    normalization sees it; equal names keep equal vectors)."""
+    from semtools_spark.embedding import HashEmbedder
+
+    mat = HashEmbedder(dim=64, seed=kg.DEFAULT_SEED).embed_texts([n for _, n in rows])
+    return spark.createDataFrame(
+        [
+            (i, n, [float(x) * (random.Random(n).uniform(0.2, 5.0) if rescale else 1.0)
+                    for x in v])
+            for (i, n), v in zip(rows, mat)
+        ],
+        "entity_id long, name string, embedding array<float>",
+    )
+
+
+def test_link_tie_rule_lowest_entity_id_on_every_tier(spark, monkeypatch):
+    """An exact tie — the same name at ids 7 and 3, in that row order —
+    links to the lowest entity_id on the driver, broadcast and LSH tiers."""
+    catalog = _catalog_from(spark, [(7, "spark"), (3, "spark")])
+    mentions = spark.createDataFrame([("spark",)], ["mention"])
+
+    def link(**kw):
+        out = kg.link_entities(mentions, catalog, dim=64, **kw)
+        return {r.mention: r.entity_id for r in out.collect()}, out
+
+    got, out = link()
+    assert got == {"spark": 3} and out._semtools_broadcasts == []  # driver
+    got, _ = link(use_lsh_above=0)
+    assert got == {"spark": 3}  # LSH
+    monkeypatch.setattr(kg, "DRIVER_LINK_BELOW", 0)
+    got, out = link()
+    assert got == {"spark": 3} and len(out._semtools_broadcasts) == 1  # broadcast
+
+
+def test_link_driver_tier_equals_broadcast_tier(spark, monkeypatch):
+    """Differential: the driver tier and the broadcast-UDF tier (forced
+    with DRIVER_LINK_BELOW = 0) return identical (entity_id,
+    link_distance, rescued) for ~200 seeded mentions — exact names, near
+    names, nonsense tokens, "" and NULL — against a catalog in shuffled
+    row order with rescaled (non-unit) vectors, a duplicated name and a
+    zero-vector entity."""
+    rng = random.Random(2024)
+    words = ["spark", "table", "row", "join", "vector", "hash", "window", "key"]
+    names = [f"entity {i} {rng.choice(words)}" for i in range(60)]
+    rows = [(i * 3 + 1, n) for i, n in enumerate(names)]
+    rows += [(500, names[10]), (2, names[10]), (900, "")]  # tie + zero vector
+    rng.shuffle(rows)
+    catalog = _catalog_from(spark, rows, rescale=True)
+
+    def nonsense():
+        return " ".join(
+            "".join(rng.choice("bcdfghjklmnpqrstvwxz") for _ in range(rng.randint(2, 7)))
+            for _ in range(rng.randint(1, 3))
+        )
+
+    mentions = (
+        [rng.choice(names) for _ in range(60)]
+        + [rng.choice(names) + " " + rng.choice(words) for _ in range(50)]
+        + [rng.choice(names).rsplit(" ", 1)[0] for _ in range(20)]
+        + [nonsense() for _ in range(66)]
+        + ["", None, "", None]
+    )
+    mdf = spark.createDataFrame([(m,) for m in mentions], "mention string")
+
+    def link():
+        out = kg.link_entities(mdf, catalog, dim=64)
+        rows = out.collect()
+        got = {r.mention: (r.entity_id, r.link_distance, r.rescued) for r in rows}
+        return got, out._semtools_broadcasts
+
+    driver, bcs = link()
+    assert bcs == []
+    monkeypatch.setattr(kg, "DRIVER_LINK_BELOW", 0)
+    broadcast, bcs = link()
+    assert len(bcs) == 1  # the broadcast UDF tier really ran
+    assert len(driver) == len(set(mentions)) > 150
+    assert driver == broadcast
+    assert driver[names[10]][0] == 2  # the duplicated name ties to the lowest id
+
+
 def test_link_udf_closure_holds_no_matrix(spark):
     """The scoring UDF's closure must capture only the Broadcast handle —
     NOT the catalog ndarray (closure capture would serialize the matrix

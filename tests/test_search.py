@@ -106,16 +106,6 @@ def test_search_on_testdata_documents(documents):
     assert all(rows[i].distance <= rows[i + 1].distance for i in range(4))
 
 
-def test_search_embeddings_topk(spark, embeddings):
-    import numpy as np
-
-    qrow = embeddings.orderBy("vec_id").first()
-    q = np.asarray(qrow.embedding)
-    res = S.search_embeddings(embeddings, q, top_k=3).collect()
-    assert res[0].vec_id == qrow.vec_id and res[0].distance < 1e-9
-    assert len(res) == 3
-
-
 def test_score_plan_has_no_context_shuffle_on_corpus(spark, docs):
     # top-k compiles to TakeOrderedAndProject (partial top-k, no full sort)
     lines = S.split_lines(docs)

@@ -56,7 +56,7 @@ def test_lsh_bucket_ann_subset_of_blocked_knn(spark, embeddings):
     rows = res.collect()
     assert rows, "LSH ANN returned nothing"
     bucketed = {r.vec_id: r.lsh_bucket for r in
-                similarity.hyperplane_signature(e, n_planes=4, dim=64).collect()}
+                similarity.int_hyperplane_signature(e, n_planes=4, dim=64).collect()}
     for r in rows:
         assert bucketed[r.q] == bucketed[r.neighbor]
 
@@ -101,9 +101,12 @@ def test_ivf_assign_is_argmin(spark, embeddings):
 def test_ivf_topk_probes_subset_and_full_probe_is_exact(spark, embeddings):
     """nprobe = n_centroids degenerates to exact brute force; nprobe < n
     returns results only from probed lists."""
-    q = [float(x) for x in np.asarray(embeddings.first().embedding)]
-    exact = [r.vec_id for r in
-             similarity.brute_force_topk(embeddings, q, k=5).collect()]
+    first = embeddings.first()
+    q = [float(x) for x in np.asarray(first.embedding)]
+    top = similarity.brute_force_topk(embeddings, q, k=5).collect()
+    # the query's own row is top-1 at distance ~0
+    assert top[0].vec_id == first.vec_id and abs(top[0].dist_micro) <= 1, top[0]
+    exact = [r.vec_id for r in top]
     full = [r.vec_id for r in
             similarity.ivf_topk(embeddings, q, k=5, nprobe=8, n_centroids=8, dim=64).collect()]
     assert full == exact
@@ -118,8 +121,8 @@ def test_lsh_signature_dim_mismatch_raises(spark):
     import pytest
     from pyspark.sql import functions as F
 
+    from semtools_spark.operators.kg import _int_signature_udf
     from semtools_spark.operators.similarity import (
-        hyperplane_signature,
         int_hyperplane_signature,
         ivf_assign,
     )
@@ -129,7 +132,7 @@ def test_lsh_signature_dim_mismatch_raises(spark):
     ).withColumn("embedding", F.col("embedding").cast("array<float>"))
     for op in (
         lambda d: int_hyperplane_signature(d, n_planes=4, dim=8),
-        lambda d: hyperplane_signature(d, n_planes=4, dim=8),
+        lambda d: d.select(_int_signature_udf(8, 42, 4)(F.col("embedding"))),
         lambda d: ivf_assign(d, n_centroids=4, dim=8),
     ):
         with pytest.raises(Exception, match="length"):
@@ -249,11 +252,12 @@ def test_ann_recall_floors_vs_brute_force(spark, embeddings):
     quality so a codebook/plane regression fails a test instead of
     silently degrading. Measured r4 on sf0.001 embeddings (uniform word-
     soup vectors — a hard, clusterless case): IVF seeded nprobe=2/8 =
-    0.505, kmeans-trained = 0.605 (training buys +0.10), LSH 3-planes =
-    0.20 falling to 0.07 at 5 planes (finer buckets trade recall for
-    candidate-set size; at 8 planes / 256 buckets over 500 uniform
-    vectors recall is ~0 by design — bucket-kNN is for near-dup-dense
-    data, IVF is the uniform-topk path)."""
+    0.505, kmeans-trained = 0.605 (training buys +0.10); LSH on the
+    integer ±1 signature = 0.255 at 3 planes falling to 0.095 at 5
+    planes (finer buckets trade recall for candidate-set size; at 8
+    planes / 256 buckets over 500 uniform vectors recall is ~0 by design
+    — bucket-kNN is for near-dup-dense data, IVF is the uniform-topk
+    path)."""
     pdf = embeddings.select("vec_id", "embedding").toPandas()
     pdf = pdf.sort_values("vec_id")
     ids = np.asarray(pdf.vec_id, dtype=np.int64)
@@ -313,23 +317,49 @@ def test_ann_recall_floors_vs_brute_force(spark, embeddings):
     assert r5 <= r3, (r5, r3)  # finer buckets monotonically trade recall
 
 
-def test_multi_probe_signatures_match_numpy(spark, embeddings):
-    """multi_probe_signatures vs a full NumPy recomputation over the
-    testdata embeddings: probe_buckets[0] is the exact int signature and
-    the probe set flips exactly the n_probes lowest-|dot| bits in
-    confidence order (ties to the lower plane index)."""
-    n_planes, n_probes, dim = 6, 2, 64
-    got = {
-        r.vec_id: list(r.probe_buckets)
-        for r in similarity.multi_probe_signatures(
-            embeddings, n_planes=n_planes, dim=dim, seed=42, n_probes=n_probes
-        ).select("vec_id", "probe_buckets").collect()
-    }
-    pdf = embeddings.select("vec_id", "embedding").toPandas()
-    W = similarity.int_plane_weights(n_planes, dim, 42)
-    for vid, vec in zip(pdf.vec_id, pdf.embedding):
-        d = np.floor(np.asarray(vec, np.float64) * 1e6).astype(np.int64) @ W.T
+def test_multi_probe_signatures_match_numpy(spark, documents):
+    """The link's fused embed + multi-probe signer (kg._embed_probe_udf)
+    vs a full NumPy recomputation over the testdata documents:
+    probe_buckets[0] is the exact int signature and the probe set flips
+    exactly the n_probes lowest-|dot| bits in confidence order (ties to
+    the lower plane index)."""
+    from semtools_spark.embedding import HashEmbedder
+    from semtools_spark.operators.kg import _embed_probe_udf
+
+    n_planes, n_probes, dim, seed = 6, 2, 64, 42
+    rows = documents.select(
+        "doc_id",
+        "text",
+        _embed_probe_udf(dim, seed, n_planes, n_probes)(F.col("text")).alias("ep"),
+    ).collect()
+    assert len(rows) > 100
+    W = similarity.int_plane_weights(n_planes, dim, seed)
+    emb = HashEmbedder(dim=dim, seed=seed)
+    for r in rows:
+        vec = np.asarray(r.ep.embedding, np.float32)
+        assert np.array_equal(vec, emb.embed_texts([r.text or ""])[0]), r.doc_id
+        d = np.floor(vec.astype(np.float64) * 1e6).astype(np.int64) @ W.T
         base = int(((d > 0).astype(np.int64) << np.arange(n_planes)).sum())
         order = sorted(range(n_planes), key=lambda j: (abs(int(d[j])), j))
         want = [base] + [base ^ (1 << j) for j in order[:n_probes]]
-        assert got[vid] == want, (vid, got[vid], want)
+        assert list(r.ep.probe_buckets) == want, (r.doc_id, r.ep.probe_buckets, want)
+
+
+def test_arrow_catalog_signer_matches_jvm_signature(spark, embeddings):
+    """kg._int_signature_udf (the LSH link's catalog signer) equals the
+    JVM int_hyperplane_signature bit for bit on the testdata embeddings,
+    at the default and at an auto-scaled plane count."""
+    from semtools_spark.operators.kg import _int_signature_udf
+
+    for n_planes in (8, 13):
+        jvm = similarity.int_hyperplane_signature(
+            embeddings, n_planes=n_planes, dim=64, seed=42
+        )
+        got = jvm.select(
+            "vec_id",
+            "lsh_bucket",
+            _int_signature_udf(64, 42, n_planes)(F.col("embedding")).alias("arrow"),
+        ).collect()
+        assert len({r.lsh_bucket for r in got}) > 1  # not degenerate
+        bad = [(r.vec_id, r.lsh_bucket, r.arrow) for r in got if r.lsh_bucket != r.arrow]
+        assert not bad, (n_planes, bad[:5])
