@@ -85,8 +85,9 @@ def _query_vec_sql() -> str:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: knowledge-graph construction over sf0.001 documents —
-    triple extraction → entity linking (broadcast cosine) → connected-
-    components canonicalization → canonical (subj, pred, obj) triples."""
+    triple extraction → entity linking (broadcast cosine) →
+    canonicalization (the link's projection) → canonical (subj, pred,
+    obj) triples."""
     docs = _t(spark, "/root/testdata/sf0.001", "documents")
     return kg.kg_pipeline(docs, dim=DIM)
 

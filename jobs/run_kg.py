@@ -4,15 +4,13 @@
 The north-rule deployment story:
 
     spark-submit --py-files semtools_spark.zip jobs/run_kg.py \
-        --pages s3://bucket/web_pages --out s3://bucket/kg \
-        --cc-checkpoint s3://bucket/kg/_cc_ckpt
+        --pages s3://bucket/web_pages --out s3://bucket/kg
 
 On a cluster the session comes from spark-submit's conf (master, executor
 count/memory, shuffle partitions); this script only creates a session when
 launched outside spark-submit (local smoke runs). Re-running with the same
 --out resumes from the checkpoint manifest (committed stages whose inputs
-and on-disk lineage still match are skipped); --cc-checkpoint additionally
-makes the connected-components loop itself resumable mid-iteration.
+and on-disk lineage still match are skipped).
 
 Build the --py-files zip with:  python -c "from semtools_spark.session \
 import _package_zip; print(_package_zip())"
@@ -68,8 +66,6 @@ def main(argv: list[str] | None = None) -> int:
                          "pinned JVM-regex extractor")
     ap.add_argument("--force", action="store_true",
                     help="recompute every stage, ignoring committed manifests")
-    ap.add_argument("--cc-checkpoint", default=None,
-                    help="shared-fs dir for durable per-round CC snapshots")
     ap.add_argument("--mode", choices=("batch", "ingest", "refresh"),
                     default="batch",
                     help="batch (default): the full 5-stage pipeline with "
@@ -128,7 +124,6 @@ def main(argv: list[str] | None = None) -> int:
             spark, args.out, dim=args.dim, seed=args.seed,
             max_link_distance=args.max_link_distance,
             link_lsh_above=args.link_lsh_above,
-            cc_checkpoint_dir=args.cc_checkpoint,
         )
         print(json.dumps({"mode": "refresh", **rep}))
         return 0
@@ -147,7 +142,6 @@ def main(argv: list[str] | None = None) -> int:
         dedup_near=args.dedup_near,
         extractor=extractor,
         force=args.force,
-        cc_checkpoint_dir=args.cc_checkpoint,
         pages_format=args.pages_format,
     )
     print(json.dumps(report["stages"], sort_keys=True))

@@ -15,19 +15,19 @@ Stages (all DataFrame-native; pandas UDFs only at the embedding boundary):
      floats = 1 GB ceiling; ours far less) — broadcast, never shuffled.
      An LSH-bucketed variant (_link_entities_lsh, below) bounds the
      per-row work when the catalog outgrows broadcast.
-  3. connected_components: canonicalize co-referring surface forms with the
-     alternating large-star/small-star algorithm (Kiveris et al.,
-     "Connected Components in MapReduce and Beyond", public) — O(log n)
-     rounds of hash-join + aggregate, each round localCheckpoint()ed to
-     cut lineage; AQE handles skewed hub nodes (hot entities).
+  3. canonicalize_mentions: co-referring surface forms share the entity
+     they link to — a projection of the top-1 link (one row per distinct
+     mention), map-only. connected_components (alternating large-star/
+     small-star, Kiveris et al., "Connected Components in MapReduce and
+     Beyond", public — O(log n) rounds of hash-join + aggregate) serves
+     graphs whose nodes have more than one edge, e.g. near-dup clusters.
   4. materialize_graph: triples + node/edge tables written as parquet
      (Iceberg stand-in), partitioned by hash of subject for co-located
      downstream joins.
 
 Scale notes (100 TB target): stage 1 is map-only; stage 2 is map-only with
-a broadcast build side; stage 3 shuffles only the *edge* relation (orders
-of magnitude smaller than the corpus) and converges in ~log(diameter)
-rounds; stage 4 writes partitioned by subj-hash so graph queries co-locate.
+a broadcast build side; stage 3 is map-only over the link table; stage 4
+writes partitioned by subj-hash so graph queries co-locate.
 """
 
 from __future__ import annotations
@@ -279,9 +279,11 @@ def link_entities(
     False everywhere on the exact tiers; on the LSH path it marks links
     produced by the bounded best-effort rescue tier — approximate by
     construction, so quality-sensitive callers threshold them
-    (``max_distance`` applies to rescue rows like any other). Distinct
-    mentions are linked once, then the (small) mapping can be
-    broadcast-joined back to the full mention stream by the caller.
+    (``max_distance`` applies to rescue rows like any other). Each
+    distinct mention, NULL included, is linked exactly once — one row per
+    mention on every tier (:func:`canonicalize_mentions` relies on it) —
+    then the (small) mapping can be broadcast-joined back to the full
+    mention stream by the caller.
 
     ``catalog_size`` (optional) is a known-row-count hint that skips the
     strategy-picking ``count()`` job when ``use_lsh_above`` is set —
@@ -558,20 +560,23 @@ def _link_entities_lsh(
         .select("mention", "__b.entity_id", "__b.link_distance")
     )
     # A mention reaches the rescue tier iff NONE of its probe buckets
-    # holds any catalog row — a bucket-SET semi-join over (mention,
-    # bucket) pairs, no embeddings and no cosine. Computing misses this
-    # way (instead of anti-joining against top1) keeps the expensive
-    # cosine join single-consumer, so it runs exactly once; the two
-    # formulations are equivalent because a mention appears in top1 iff
-    # some probe bucket produced a candidate pair.
-    cat_buckets = c_sig.select("lsh_bucket").distinct()
-    hit = (
+    # holds any catalog row — a per-mention count over (mention, bucket)
+    # pairs left-joined to the catalog's bucket set, no embeddings and no
+    # cosine. Computing misses this way (instead of anti-joining against
+    # top1) keeps the expensive cosine join single-consumer, so it runs
+    # exactly once; the two formulations are equivalent because a mention
+    # appears in top1 iff some probe bucket produced a candidate pair.
+    # The groupBy keeps a NULL mention as one group, where an equi
+    # anti-join would never match it and link it twice.
+    cat_buckets = c_sig.select(F.col("lsh_bucket").alias("__cat_bucket")).distinct()
+    missed = (
         m_cand.select("mention", "lsh_bucket")
-        .join(cat_buckets, "lsh_bucket", "left_semi")
+        .join(cat_buckets, F.col("lsh_bucket") == F.col("__cat_bucket"), "left")
+        .groupBy("mention")
+        .agg(F.count("__cat_bucket").alias("__hits"))
+        .filter(F.col("__hits") == 0)
         .select("mention")
-        .distinct()
     )
-    missed = m_probe.select("mention").join(hit, "mention", "left_anti")
     sample = (
         catalog.select("entity_id", "embedding")
         # seeded pseudo-random subset: unbiased across the id range and
@@ -895,64 +900,17 @@ def _driver_union_find(e: DataFrame) -> DataFrame:
     return spark.createDataFrame(rows, schema)
 
 
-def canonicalize_mentions(
-    linked: DataFrame,
-    mention_offset: int = 1 << 62,
-    cc_checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Surface-form canonicalization: union mention→entity links into a
-    bipartite graph (mentions offset into a disjoint id space), run CC,
-    and return (mention, canonical_id). Two surface forms linked to the
-    same entity — or transitively via shared entities — canonicalize
-    together.
+def canonicalize_mentions(linked: DataFrame) -> DataFrame:
+    """Surface-form canonicalization: (mention, entity_id, canonical_id)
+    with ``canonical_id = entity_id``. Two surface forms linked to the
+    same entity canonicalize together.
 
-    Mention node ids occupy ``[mention_offset, 2*mention_offset)`` —
-    the FULL upper half of the non-negative 63-bit long range by default
-    (reserved high bit, entities confined below). The r3 scheme pmod'd
-    into a 10^9 space, where distinct surface forms birthday-collide at
-    ~3*10^4 forms and a collision silently FUSES two unrelated canonical
-    clusters; at 2^62 the same expectation needs ~3*10^9 distinct forms.
-    Entity ids must stay below ``mention_offset`` — enforced per row by
-    a codegen assert (catalog ids are small ints, so the check is free;
-    a violation is a wrong-answer hazard, not a recoverable state).
-
-    Output never contains a mention node id: every linked mention has an
-    entity edge, entity ids are strictly smaller than mention nodes, and
-    CC's component id is the min node id — so ``canonical_id`` is always
-    an entity id and is deterministic regardless of the mention-node
-    hashing scheme."""
-    # pmod, not abs(hash) % n: abs(Long.MIN_VALUE) overflows BIGINT (an
-    # error under ANSI), and xxhash64 WILL hit it once in ~2^64 rows —
-    # certain at 10^12-document scale
-    entity_in_range = F.assert_true(
-        F.col("entity_id") < F.lit(mention_offset),
-        F.lit(
-            f"entity_id >= mention_offset ({mention_offset}): entity and "
-            "mention node id spaces would overlap and CC would fuse them"
-        ),
-    )
-    m_ids = linked.select(
-        "mention",
-        (F.pmod(F.xxhash64("mention"), F.lit(mention_offset)) + F.lit(mention_offset)).alias(
-            "mention_node"
-        ),
-        # assert_true is NULL whenever the guard passes, so the coalesce
-        # is the identity — but it ties the assert into a live column so
-        # column pruning can't drop the check
-        F.coalesce(entity_in_range.cast("long"), F.col("entity_id")).alias("entity_id"),
-    )
-    edges = m_ids.select(
-        F.col("mention_node").alias("src"), F.col("entity_id").alias("dst")
-    )
-    comp = connected_components(edges, checkpoint_dir=cc_checkpoint_dir)
-    return (
-        m_ids.join(comp, m_ids.mention_node == comp.node, "left")
-        .select(
-            "mention",
-            "entity_id",
-            F.coalesce("component", "entity_id").alias("canonical_id"),
-        )
-    )
+    Relies on the :func:`link_entities` contract: ONE row per distinct
+    mention, NULL included. Every mention node of the bipartite
+    mention→entity graph then has degree 1, so each connected component
+    is one entity plus the mentions linked to it, and the component is
+    that entity — a projection, no CC run and no shuffle."""
+    return linked.select("mention", "entity_id", F.col("entity_id").alias("canonical_id"))
 
 
 def materialize_graph(
@@ -1019,8 +977,9 @@ def kg_pipeline(
     dim: int = 64,
     seed: int = DEFAULT_SEED,
 ) -> DataFrame:
-    """End-to-end: extract → link (subjects+objects as mentions) → CC
-    canonicalize → canonical triples with provenance counts.
+    """End-to-end: extract → link (subjects+objects as mentions) →
+    canonicalize (the link's projection) → canonical triples with
+    provenance counts.
 
     Returns (subj, pred, obj, subj_id, obj_id, n_mentions) — the flagship
     query of this engine.

@@ -6,7 +6,7 @@ html, text, lang)`` table it runs
     parse  → byte-identical html→text extraction        (operators.parse)
     triples→ deterministic (subj, pred, obj) extraction  (operators.kg)
     link   → mention → entity cosine top-1, broadcast    (operators.kg)
-    canon  → connected-components canonicalization       (operators.kg)
+    canon  → canonical ids, the link's projection        (operators.kg)
     graph  → canonical triples + node/edge tables        (operators.kg)
 
 Every stage writes parquet (the Iceberg stand-in — behind a catalog these
@@ -245,7 +245,6 @@ def run_webkg_pipeline(
     extractor=None,
     force: bool = False,
     fail_after: str | None = None,
-    cc_checkpoint_dir: str | None = None,
     pages_format: str = "parquet",
 ) -> dict:
     """Run (or resume) the full pipeline. Returns per-stage metrics plus
@@ -484,14 +483,12 @@ def run_webkg_pipeline(
 
     run_stage("link", [paths["triples"]], _build_link)
 
-    # 4. canon: connected-components canonicalization of surface forms
+    # 4. canon: canonical id per surface form — a map-only projection of
+    # the one-row-per-mention link table
     run_stage(
         "canon",
         [paths["link"]],
-        lambda: kg.canonicalize_mentions(
-            spark.read.parquet(paths["link"]),
-            cc_checkpoint_dir=cc_checkpoint_dir,
-        ),
+        lambda: kg.canonicalize_mentions(spark.read.parquet(paths["link"])),
     )
 
     # 5. graph: canonical triples with provenance counts

@@ -14,11 +14,11 @@ production ingest pipelines split it:
   so the semantics are tested once and deployed both ways (the same
   principle as :mod:`streaming.incremental`'s Workspace.sync reuse);
 * **global work scales with the corpus** — entity linking needs the full
-  distinct-mention set and canonicalization is an iterative global CC,
-  so ``refresh_graph`` recomputes them as a batch over everything
+  distinct-mention set (canonicalization is a projection of the link),
+  so ``refresh_graph`` recomputes it as a batch over everything
   ingested so far, on whatever cadence the operator chooses. At 100 TB
   the refresh reads only the two columns the mention set needs
-  (column-pruned parquet scan), and its join/CC shapes are the
+  (column-pruned parquet scan), and its join shapes are the
   pipeline's — already certified at scale.
 
 Exactly-once: the streaming checkpoint decides WHICH files each
@@ -165,11 +165,11 @@ def refresh_graph(
     seed: int = 42,
     max_link_distance: float | None = None,
     link_lsh_above: int | None = None,
-    cc_checkpoint_dir: str | None = None,
 ) -> dict:
     """Recompute the global stages (link → canon → graph) over the
     accumulated triples — the batch pipeline's exact dataflow
-    (pipeline.py stages 3-5), writing ``canon.parquet`` and
+    (pipeline.py stages 3-5; canon is the link's projection), writing
+    ``link.parquet``, ``canon.parquet`` and
     ``graph.parquet`` next to the ingest table. Deterministic: a refresh
     after N batches equals the batch pipeline run over the union of
     those batches' pages (pinned by the equivalence test)."""
@@ -189,10 +189,7 @@ def refresh_graph(
         catalog_size=len(kg.ENTITIES),
     )
     link.write.mode("overwrite").parquet(f"{out}/link.parquet")
-    canon = kg.canonicalize_mentions(
-        spark.read.parquet(f"{out}/link.parquet"),
-        cc_checkpoint_dir=cc_checkpoint_dir,
-    )
+    canon = kg.canonicalize_mentions(spark.read.parquet(f"{out}/link.parquet"))
     canon.write.mode("overwrite").parquet(f"{out}/canon.parquet")
     canon = spark.read.parquet(f"{out}/canon.parquet")
     c_subj = canon.select(

@@ -6,6 +6,8 @@ O(log n)-round convergence)."""
 import random
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from semtools_spark.operators import kg
@@ -134,40 +136,81 @@ def test_canonicalize_merges_shared_entity(spark):
     assert canon["table"] == 2
 
 
-def test_canonicalize_no_id_space_collision(spark):
-    """mention_234 and mention_13387 collide under the r3 scheme
-    (pmod(xxhash64, 1e9): both -> 720555670) — in a 10^9 id space,
-    distinct surface forms birthday-collide at ~3*10^4 forms and the
-    collision silently FUSES their clusters. The 62-bit space must keep
-    them apart: linked to different entities, they must NOT share a
-    canonical_id."""
-    from pyspark.sql import functions as F
-
-    a, b = "mention_234", "mention_13387"
-    collide = (
-        spark.createDataFrame([(a,), (b,)], ["m"])
-        .select(F.pmod(F.xxhash64("m"), F.lit(1_000_000_000)).alias("k"))
-        .distinct()
-        .count()
+def test_link_lsh_one_row_per_mention_including_null(spark):
+    """The LSH tier links each distinct mention once, NULL included: a
+    NULL mention whose probe bucket holds catalog rows is not also sent
+    to the rescue tier — a second NULL row would give
+    canonicalize_mentions two canonical ids for one mention."""
+    names = [f"entity {i} term{i % 97}" for i in range(4000)]
+    catalog = kg.build_entity_catalog(spark, names, dim=64)
+    mentions = spark.createDataFrame(
+        [(None,), ("",), ("entity 5 term5",), ("zzz",)], "mention string"
     )
-    assert collide == 1  # the planted pair really collides mod 1e9
-    linked = spark.createDataFrame([(a, 1), (b, 2)], ["mention", "entity_id"])
-    canon = {r.mention: r.canonical_id for r in kg.canonicalize_mentions(linked).collect()}
-    assert canon[a] == 1 and canon[b] == 2
-    assert canon[a] != canon[b]
+    linked = kg.link_entities(mentions, catalog, dim=64, use_lsh_above=0)
+    rows = linked.collect()
+    assert len(rows) == 4, rows
+    assert {r.mention for r in rows} == {None, "", "entity 5 term5", "zzz"}
+    by_m = {r.mention: r.entity_id for r in rows}
+    assert by_m["entity 5 term5"] == 5
+    canon = kg.canonicalize_mentions(linked).collect()
+    assert len(canon) == 4
+    assert all(r.canonical_id == by_m[r.mention] for r in canon)
 
 
-def test_canonicalize_rejects_entity_id_in_mention_space(spark):
-    """The id-space disjointness is enforced, not assumed: an entity id
-    at/above mention_offset would overlap the mention node space and CC
-    would fuse unrelated clusters — the guard must raise instead."""
-    import pytest as _pytest
-
-    linked = spark.createDataFrame(
-        [("spark", (1 << 62) + 7)], ["mention", "entity_id"]
+@st.composite
+def _link_tables(draw):
+    """Random one-row-per-mention link tables: distinct mentions (NULL
+    and "" among them) each on one entity; entity ids small or near
+    2^62; some entities take many mentions, others one."""
+    eids = draw(
+        st.lists(
+            st.one_of(st.integers(0, 50), st.integers((1 << 62) - 100, (1 << 62) - 1)),
+            min_size=1, max_size=8, unique=True,
+        )
     )
-    with _pytest.raises(Exception, match="entity_id"):
-        kg.canonicalize_mentions(linked).collect()
+    names = draw(
+        st.lists(
+            st.one_of(
+                st.none(), st.just(""),
+                st.text(st.characters(blacklist_categories=("Cs",)), max_size=6),
+            ),
+            min_size=1, max_size=40, unique=True,
+        )
+    )
+    return [(m, draw(st.sampled_from(eids))) for m in names]
+
+
+def test_canonicalize_projection_equals_bipartite_cc(spark):
+    """Differential: on one-row-per-mention link tables, the projection's
+    canonical_id equals the component of each mention in
+    connected_components over the bipartite mention→entity graph
+    (mention node ids above every entity id), on both CC paths."""
+    from itertools import count
+
+    turn = count()
+    hub = [(f"m{i}", 7) for i in range(3000)] + [(None, 7), ("", 9), ("solo", 1 << 40)]
+
+    @settings(max_examples=6, deadline=None, derandomize=True, database=None)
+    @example(hub)
+    @given(_link_tables())
+    def run(rows):
+        linked = spark.createDataFrame(rows, "mention string, entity_id bigint")
+        got = {r.mention: r.canonical_id for r in kg.canonicalize_mentions(linked).collect()}
+        assert len(got) == len(rows)
+        base = max(e for _, e in rows) + 1
+        node = {m: base + i for i, (m, _) in enumerate(rows)}
+        edges = spark.createDataFrame(
+            [(node[m], e) for m, e in rows], "src bigint, dst bigint"
+        )
+        comp = {
+            r.node: r.component
+            for r in kg.connected_components(
+                edges, small_graph_threshold=0 if next(turn) % 2 else 200_000
+            ).collect()
+        }
+        assert {m: comp[node[m]] for m, _ in rows} == got
+
+    run()
 
 
 def test_kg_pipeline_on_testdata(documents):
