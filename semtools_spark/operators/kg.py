@@ -176,24 +176,53 @@ DRIVER_LINK_BELOW = 8192
 def _unit_catalog(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
     """(ids, matn) from an (entity_id, embedding) frame: rows in stable
     ``entity_id`` order, embeddings L2-normalized float32 (zero rows stay
-    zero). The id order is the tie rule — :func:`_top1` takes the first
-    maximum, so an exact tie links to the lowest ``entity_id``, as the
-    LSH tier's ``min_by`` over (distance, entity_id) does."""
+    zero). The id order is the tie rule — :func:`_top1` decides ties on
+    the exact float64 score and takes the first (lowest) index among
+    them, which is the lowest ``entity_id``, as the LSH tier's ``min_by``
+    over (distance, entity_id) does. Raises ValueError on a NaN or
+    infinite embedding: a NaN score would leave its query row with no
+    kept column in :func:`_top1`."""
     ids = np.asarray(pdf["entity_id"], dtype=np.int64)
     order = np.argsort(ids, kind="stable")
     emb = pdf["embedding"].tolist()
     mat = np.stack([np.asarray(emb[i], dtype=np.float32) for i in order])
+    if not np.isfinite(mat).all():
+        raise ValueError("catalog embeddings must be finite (NaN or infinity found)")
     norms = np.linalg.norm(mat, axis=1)
     norms[norms == 0] = 1.0
     return ids[order], (mat / norms[:, None]).astype(np.float32)
 
 
 def _top1(q: np.ndarray, matn: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Cosine top-1 of each normalized query row against ``matn``: ONE
-    float32 matmul + argmax, returning (row index, float64 distance)."""
-    sims = q @ matn.T  # (n, |catalog|)
-    best = sims.argmax(axis=1)
-    return best, 1.0 - sims[np.arange(len(q)), best].astype(np.float64)
+    """Cosine top-1 of each normalized query row against ``matn``,
+    returning (row index, float64 distance); each row's answer depends
+    only on that row and the catalog, never on the batch around it.
+
+    BLAS sums each float32 dot in an order that depends on the shape of
+    the call (gemv for one row, other kernels for other row counts), so
+    ONE float32 matmul only screens: per row it keeps every column within
+    ``eps = 2·dim·finfo(float32).eps`` of the row maximum. A float32 dot
+    of unit rows is off by at most γ_dim ≈ dim·2⁻²⁴ (Higham, *Accuracy
+    and Stability of Numerical Algorithms*, §3.1), so ``eps`` is twice the
+    error bound on the difference of two dots and the true best column is
+    always kept. The kept pairs are re-scored in float64 by a per-pair
+    NumPy reduction: float32 products are exact in float64 and the
+    summation order depends only on ``dim``. The highest exact score wins,
+    a tie goes to the lowest index, and the distance is ``1 − exact``.
+    A zero query row (empty or NULL mention) scores exactly 0 against
+    every column, so it keeps only column 0 instead of re-scoring the
+    whole catalog."""
+    sims = q @ matn.T  # (n, |catalog|) float32 screen
+    eps = 2 * matn.shape[1] * np.finfo(np.float32).eps
+    keep = sims >= sims.max(axis=1, keepdims=True) - eps
+    zero = ~q.any(axis=1)
+    keep[zero] = False
+    keep[zero, 0] = True
+    rows, cols = np.nonzero(keep)  # row-major, so rows ascend
+    exact = (q[rows].astype(np.float64) * matn[cols].astype(np.float64)).sum(axis=1)
+    order = np.lexsort((cols, -exact, rows))
+    pick = order[np.flatnonzero(np.diff(rows, prepend=-1))]
+    return cols[pick], 1.0 - exact[pick]
 
 
 def _plane_buckets(mat: np.ndarray, w: np.ndarray, n_probes: int) -> np.ndarray:
@@ -249,8 +278,9 @@ def link_entities(
 ) -> DataFrame:
     """Cosine top-1 link of each distinct mention surface form against the
     catalog — the M-query generalization of the reference's brute-force
-    scan (search/mod.rs:77-120): per batch ONE float32 matmul + argmax
-    (:func:`_top1`) against the normalized catalog.
+    scan (search/mod.rs:77-120): per batch ONE float32 matmul screen and
+    an exact float64 re-score of the near-best pairs (:func:`_top1`)
+    against the normalized catalog.
 
     Three physical strategies:
 
@@ -261,7 +291,8 @@ def link_entities(
       ships to executors via ``SparkContext.broadcast`` — once per
       executor, never per task — and each batch scores against all of
       it. Exact; right while the catalog fits executor memory (≲1 GB).
-      Scores are identical to the driver tier's.
+      Scores are identical to the driver tier's, bit for bit, however
+      the mentions are split into batches.
     * **LSH-bucketed** (``use_lsh_above=n``: engaged when the catalog
       exceeds n rows): mentions and catalog are embedded, signed into
       integer hyperplane buckets (:func:`_plane_buckets`, bit-identical

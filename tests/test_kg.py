@@ -485,6 +485,50 @@ def test_link_driver_tier_equals_broadcast_tier(spark, monkeypatch):
     assert driver[names[10]][0] == 2  # the duplicated name ties to the lowest id
 
 
+def test_top1_is_batch_independent_and_exact():
+    """Spark-free kernel check: _top1 gives each row the same (index,
+    distance), bit for bit, whether the batch is scored whole or in
+    slices; an empty text links to (0, 1.0); a duplicated catalog row
+    ties to the lower index; and every distance matches a float64 brute
+    force to 1e-12 (two float64 sums of dim exact products differ by at
+    most 2·dim·2⁻⁵³ ≈ 5.7e-14 at dim 256). A NaN catalog embedding is
+    refused rather than left to drop rows from the screen."""
+    import numpy as np
+    import pandas as pd
+
+    from semtools_spark.embedding import HashEmbedder
+
+    dim = 256
+    rng = random.Random(7)
+    words = ["spark", "table", "row", "join", "vector", "hash", "window", "key"]
+    names = [f"entity {i} {rng.choice(words)}" for i in range(400)]
+    names[250] = names[40]  # duplicated row
+    names[300] = ""  # zero row
+    embed = HashEmbedder(dim=dim, seed=kg.DEFAULT_SEED).embed_texts
+    ids, matn = kg._unit_catalog(
+        pd.DataFrame({"entity_id": range(len(names)), "embedding": list(embed(names))})
+    )
+    texts = (
+        [rng.choice(names) for _ in range(80)]
+        + [rng.choice(names) + " " + rng.choice(words) for _ in range(80)]
+        + ["".join(rng.choice("bcdfghjklmnpqrstvwxz") for _ in range(6)) for _ in range(40)]
+        + ["", names[40]]
+    )
+    q = embed(texts)
+    best, dist = kg._top1(q, matn)
+    for size in (1, 2, 3, 7, 16, 50):
+        for i in range(0, len(q), size):
+            b, d = kg._top1(q[i : i + size], matn)
+            assert b.tolist() == best[i : i + size].tolist()
+            assert d.tolist() == dist[i : i + size].tolist()
+    assert (int(best[-2]), float(dist[-2])) == (0, 1.0)  # empty text
+    assert ids[best[-1]] == 40  # duplicated row ties to the lower index
+    brute = q.astype(np.float64) @ matn.astype(np.float64).T
+    assert np.abs(dist - (1.0 - brute.max(axis=1))).max() < 1e-12
+    with pytest.raises(ValueError, match="finite"):
+        kg._unit_catalog(pd.DataFrame({"entity_id": [0, 1], "embedding": [[1.0, 0.0], [np.nan, 1.0]]}))
+
+
 def test_link_udf_closure_holds_no_matrix(spark):
     """The scoring UDF's closure must capture only the Broadcast handle —
     NOT the catalog ndarray (closure capture would serialize the matrix
