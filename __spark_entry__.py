@@ -157,7 +157,7 @@ def _q_ann_knn_blocked(spark, sf_dir):
     # dim deliberately NOT passed: at this gate's scale (2k vectors,
     # ~80k pairs) the unrolled-cosine codegen compile costs more than the
     # interpreted fold saves; the unroll pays off only on multi-million
-    # pair joins (see kg._link_entities_lsh)
+    # pair joins, which no gate query here runs
     res = similarity.knn_within_blocks(
         emb, k=1, query_filter=(F.col("id") % 25 == 0)
     )

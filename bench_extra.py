@@ -7,7 +7,7 @@ Does NOT replace bench.py (frozen). Usage:
   python bench_extra.py plans [out_suffix]   # capture .explain("formatted")
   python bench_extra.py suite [n_repeats]    # noop-sink timings per query
   python bench_extra.py webkg                # pipeline per-stage breakdown
-  python bench_extra.py lsh                  # link_lsh phase breakdown
+  python bench_extra.py lsh                  # link_lsh plan + count/noop walls
   python bench_extra.py cc                   # kg_components round timing
 """
 
@@ -98,60 +98,21 @@ def cmd_webkg():
 
 
 def cmd_lsh():
-    """Phase breakdown of the link_lsh_150k bench: embed+sig checkpoint,
-    catalog signatures, candidate join + top1, miss/rescue, final agg."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from semtools_spark.embedding import embed_udf
-    from semtools_spark.operators import kg
+    """The link_lsh_150k leaf: its explain("formatted") written to
+    plans/link_lsh_150k.txt, then its count()-timed and noop-sink walls."""
+    from bench import _bench_lsh_link, _lsh_link_inputs
 
     spark = _spark()
-    n_cat, n_mention_src = 150_000, 200_000
-    words = (
-        "corp labs systems group inc holdings tech media works global "
-        "north south atlas nova delta vertex orion helix quanta zephyr"
-    ).split()
-    name = F.concat_ws(
-        " ",
-        F.lit("entity"),
-        F.col("id").cast("string"),
-        F.element_at(F.array(*[F.lit(x) for x in words]), (F.col("id") % 19 + 1).cast("int")),
-        F.element_at(F.array(*[F.lit(x) for x in words]), (F.col("id") * 7 % 19 + 1).cast("int")),
+    linked = _lsh_link_inputs(spark)[0]()
+    plan = linked._sc._jvm.PythonSQLUtils.explainString(
+        linked._jdf.queryExecution(), "formatted"
     )
-    catalog = (
-        spark.range(n_cat)
-        .select(F.col("id").alias("entity_id"), name.alias("name"))
-        .withColumn("embedding", embed_udf(dim=64)(F.col("name")))
-        .localCheckpoint()
-    )
-    cat_id = F.pmod(F.xxhash64("id"), F.lit(n_cat))
-    m_name = F.concat_ws(
-        " ",
-        F.lit("entity"),
-        cat_id.cast("string"),
-        F.element_at(F.array(*[F.lit(x) for x in words]), (cat_id % 19 + 1).cast("int")),
-        F.element_at(F.array(*[F.lit(x) for x in words]), (cat_id * 7 % 19 + 1).cast("int")),
-    )
-    mention = F.when(F.col("id") % 10 == 0, F.concat(m_name, F.lit(" ltd"))).otherwise(m_name)
-    mentions = spark.range(n_mention_src).select(mention.alias("mention")).localCheckpoint()
-
-    t0 = time.time()
-    linked = kg.link_entities(mentions, catalog, use_lsh_above=50_000, catalog_size=n_cat)
-    t_build = time.time() - t0
-    t0 = time.time()
-    agg = linked.agg(
-        F.count("*").alias("n"), F.sum(F.col("rescued").cast("long")).alias("n_rescued")
-    ).first()
-    t_run = time.time() - t0
-    print(json.dumps({
-        "build_s": round(t_build, 3),
-        "run_s": round(t_run, 3),
-        "n": int(agg["n"]),
-        "n_rescued": int(agg["n_rescued"]),
-    }))
-    for b in getattr(linked, "_semtools_broadcasts", ()):
+    with open(os.path.join(os.path.dirname(PLANS_DIR), "link_lsh_150k.txt"), "w") as f:
+        f.write(plan)
+    for b in linked._semtools_broadcasts:
         b.unpersist()
+    wall, noop_wall, stats = _bench_lsh_link(spark)
+    print(json.dumps({"count_s": round(wall, 3), "noop_s": round(noop_wall, 3), **stats}))
     spark.stop()
 
 

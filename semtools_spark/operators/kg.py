@@ -9,12 +9,13 @@ Stages (all DataFrame-native; pandas UDFs only at the embedding boundary):
      filter), fully oracle-expressible in SQL, trivially parallel — no
      shuffle at all until the optional distinct.
   2. link_entities: mention surface forms → canonical entity ids by cosine
-     top-1 against a BROADCAST entity-embedding matrix (the reference's
-     brute-force cosine scan, search/mod.rs:77-120, generalized from 1
-     query to M mentions). The catalog is small (≤10^6 entities × 256
-     floats = 1 GB ceiling; ours far less) — broadcast, never shuffled.
-     An LSH-bucketed variant (_link_entities_lsh, below) bounds the
-     per-row work when the catalog outgrows broadcast.
+     top-1 (the reference's brute-force cosine scan, search/mod.rs:77-120,
+     generalized from 1 query to M mentions), one NumPy kernel on every
+     tier: on the driver, or against a BROADCAST catalog matrix (≤10^6
+     entities × 256 floats = 1 GB ceiling; ours far less). A catalog that
+     outgrows broadcast takes the LSH tier (_link_entities_lsh, below):
+     mentions and catalog are cogrouped by hyperplane bucket and each
+     bucket runs the same kernel once.
   3. canonicalize_mentions: co-referring surface forms share the entity
      they link to — a projection of the top-1 link (one row per distinct
      mention), map-only. connected_components (alternating large-star/
@@ -26,8 +27,9 @@ Stages (all DataFrame-native; pandas UDFs only at the embedding boundary):
      downstream joins.
 
 Scale notes (100 TB target): stage 1 is map-only; stage 2 is map-only with
-a broadcast build side; stage 3 is map-only over the link table; stage 4
-writes partitioned by subj-hash so graph queries co-locate.
+a broadcast build side, or on the LSH tier one cogroup shuffled by bucket
+plus one aggregate by mention; stage 3 is map-only over the link table;
+stage 4 writes partitioned by subj-hash so graph queries co-locate.
 """
 
 from __future__ import annotations
@@ -296,12 +298,12 @@ def link_entities(
     * **LSH-bucketed** (``use_lsh_above=n``: engaged when the catalog
       exceeds n rows): mentions and catalog are embedded, signed into
       integer hyperplane buckets (:func:`_plane_buckets`, bit-identical
-      to similarity.int_hyperplane_signature), candidates joined WITHIN
-      bucket with exact cosine re-rank — the shuffle key is the bucket,
-      never all-pairs. Mentions whose buckets hold no catalog entry fall
-      back to a bounded rescue sample so every mention still links.
-      Exact surface-form matches always collide (identical vector ⇒
-      identical signature).
+      to similarity.int_hyperplane_signature) and cogrouped by bucket;
+      each bucket scores its mentions against its catalog rows with the
+      same kernel — the shuffle key is the bucket, never all-pairs.
+      Mentions whose buckets hold no catalog entry fall back to a bounded
+      rescue sample so every mention still links. Exact surface-form
+      matches always collide (identical vector ⇒ identical signature).
 
     Tie rule, every tier: an exact distance tie links to the lowest
     ``entity_id``.
@@ -446,6 +448,63 @@ def _int_signature_udf(dim: int, seed: int, n_planes: int):
     return _sig
 
 
+#: mention rows per :func:`_top1` call on the LSH tier — bounds the float32
+#: screen in a hot bucket; no answer depends on it (the kernel is
+#: batch-independent)
+LSH_BLOCK_ROWS = 1024
+
+
+def _top1_blocks(q: np.ndarray, ids: np.ndarray, matn: np.ndarray, block: int):
+    """:func:`_top1` of ``q`` (≥ 1 row) in row blocks → (entity ids, distances)."""
+    best, dist = zip(*(_top1(q[i : i + block], matn) for i in range(0, len(q), block)))
+    return ids[np.concatenate(best)], np.concatenate(dist)
+
+
+def _bucket_scorer(block: int):
+    """cogroup body: one LSH bucket's mention rows against its catalog rows
+    (:func:`_unit_catalog`, which also refuses a NaN row that no mention
+    probes, then :func:`_top1`). With no catalog rows, the mentions leave
+    with ``hit=False`` and a placeholder (entity 0, distance 1.0)."""
+
+    def score(m: pd.DataFrame, c: pd.DataFrame) -> pd.DataFrame:
+        n = len(m)
+        ent, dist = np.zeros(n, np.int64), np.ones(n)
+        if len(c):
+            ids, matn = _unit_catalog(c)
+            if n:
+                q = np.stack(m["embedding"].tolist()).astype(np.float32, copy=False)
+                ent, dist = _top1_blocks(q, ids, matn, block)
+        return pd.DataFrame(
+            {"mention": m["mention"], "entity_id": ent,
+             "link_distance": dist, "hit": np.full(n, len(c) > 0)}
+        )
+
+    return score
+
+
+def _rescue_misses(bc, dim: int, seed: int, block: int):
+    """mapInPandas body: each ``hit=False`` row re-embeds its mention and
+    takes :func:`_top1` against the BROADCAST rescue sample (the closure
+    holds only the handle, as in :func:`_make_link_udf`); hit rows pass."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ids, matn = bc.value
+        embedder = HashEmbedder(dim=dim, seed=seed)
+        for b in batches:
+            miss = ~b["hit"].to_numpy(dtype=bool)
+            ent = b["entity_id"].to_numpy(dtype=np.int64, copy=True)
+            dist = b["link_distance"].to_numpy(dtype=np.float64, copy=True)
+            if miss.any():
+                q = embedder.embed_texts(b["mention"][miss].fillna("").tolist())
+                ent[miss], dist[miss] = _top1_blocks(q, ids, matn, block)
+            yield pd.DataFrame(
+                {"mention": b["mention"], "entity_id": ent,
+                 "link_distance": dist, "rescued": miss}
+            )
+
+    return run
+
+
 def _link_entities_lsh(
     distinct_m: DataFrame,
     catalog: DataFrame,
@@ -463,80 +522,54 @@ def _link_entities_lsh(
     catalog: ``max(8, bit_length(|catalog| // 32))``, clamped to 20 —
     i.e. ~32 catalog rows per bucket. A FIXED plane count is a scale
     bug: 8 planes = 256 buckets puts ~600 rows/bucket at a 150k-entity
-    catalog (measured 157 s for 124k mentions — ~2·10⁸ candidate pairs)
-    and 4·10⁴ rows/bucket at 10⁷ entities, quadratically worse; sizing
-    occupancy keeps the per-bucket candidate join flat as the catalog
-    grows (Lv et al., VLDB'07 — multi-probe exists precisely so high
-    plane counts don't cost recall).
+    catalog and 4·10⁴ at 10⁷ entities; sizing occupancy keeps the
+    per-bucket work flat as the catalog grows (Lv et al., VLDB'07 —
+    multi-probe exists precisely so high plane counts don't cost recall).
 
-    Three bounded tiers — NO crossJoin and NO single-reducer window
-    anywhere (the r3 shape funneled |catalog| rows per missed mention
-    through one shuffle partition of a mention×catalog cross join —
-    exactly the hot-key blowup this path exists to avoid):
+    Three steps — no join of mentions with catalog, NO crossJoin and NO
+    single-reducer window anywhere:
 
-    1. **bucket join**: mention probe buckets (exact signature + the
-       ``n_probes`` lowest-confidence bits flipped, multi-probe LSH)
-       equi-join the catalog's exact buckets; exact cosine re-rank.
-       Shuffle key = bucket; top-1 via ``min_by`` AGGREGATION so hot
-       mentions partially aggregate map-side instead of sorting under a
-       window.
-    2. **multi-probe** (inside tier 1): a mention whose exact bucket is
-       empty usually collides in a flipped-bit bucket — misses become
-       rare instead of common under skewed embedding mass.
-    3. **rescue**: the remaining misses score against a BOUNDED catalog
-       subset — a SEEDED PSEUDO-RANDOM sample of ``max_rescue_catalog``
-       entities (order by xxhash64(entity_id, seed), TakeOrdered — no
-       full sort, deterministic per seed; r4 took "first N by id", a
-       biased subset that systematically excluded high-id entities) via
-       the same broadcast Arrow matmul as the small-catalog path:
-       map-only, memory bounded by the cap, best effort by construction
-       (tiers 1-2 make reaching it rare). Every mention still links, and
-       every rescue row is flagged ``rescued=true`` so callers can
-       threshold or drop approximate links (pair with ``max_distance``
-       to make a wrong-sample rescue filterable).
+    1. **score per bucket**: mentions sign into their exact bucket plus
+       the ``n_probes`` buckets with their lowest-confidence bit flipped
+       (multi-probe LSH), catalog rows into their exact bucket; the two
+       sides are cogrouped by bucket and each bucket runs ONE dense
+       :func:`_top1` (the driver tier's kernel) instead of a hash join
+       that scores every candidate pair (Matrix Multiplication Join,
+       ICDE'23). Mentions in a bucket without catalog rows get
+       ``hit=False`` — a flag, not a NULL ``entity_id``, which pandas
+       would widen to float64 and so round ids above 2^53.
+    2. **one row per mention**: ``min_by`` over (not hit, distance,
+       entity_id) — a hit beats a miss, then the nearest entity, then the
+       lowest id (the tie rule of every tier; distances are exact per
+       pair, so a tie across probe buckets is a true tie). The group-by
+       keeps NULL as one mention.
+    3. **rescue**: a mention none of whose probe buckets holds a catalog
+       row scores against a BOUNDED, SEEDED pseudo-random sample of
+       ``max_rescue_catalog`` entities (order by xxhash64(entity_id,
+       seed), TakeOrdered — no full sort, unbiased across the id range),
+       broadcast once, in one map-only pass. Best effort by construction
+       (multi-probe makes it rare); every rescue row is flagged
+       ``rescued=true`` so callers can threshold or drop approximate
+       links (pair with ``max_distance``).
     """
-    from semtools_spark.functions.vectors import cosine_distance_expr
-
     spark = distinct_m.sparkSession
     if n_planes is None:
         n_cat = catalog_size if catalog_size is not None else catalog.count()
         n_planes = min(20, max(8, (max(1, n_cat) // 32).bit_length()))
-    # m_probe feeds both the candidate join and the missed-mention
-    # computation: a lazy local checkpoint makes that ONE pass. The
-    # embedding AND the multi-probe signature are computed in a SINGLE
-    # fused pandas UDF (guide §4.2): the embedding is already Python-side,
-    # so signing it there costs one NumPy matmul per batch instead of a
-    # second boundary crossing plus the interpreted per-element JVM fold.
-    # (Lineage-cutting the downstream cosine join is deliberately NOT
-    # done: Dataset.localCheckpoint materialized the tiny top1 relation
-    # ~100x slower than computing it — 62 s for 1.5k mentions — and
-    # persist()'s columnar cache build over the array<float> candidate
-    # relation was slower still, 280 s vs 110 s end-to-end at a 150k
-    # catalog. Instead the plan below is shaped so the cosine join has
-    # exactly ONE consumer.)
-    # AQE coalesces the post-distinct shuffle by BYTE size, which is the
-    # wrong proxy for a compute-dense stage: a few MB of distinct mention
-    # strings collapse to 1-2 partitions and the embed UDF (and the
-    # cosine join below) run nearly serially on an idle cluster
-    # (measured: 2 tasks on 32 cores — 6.05 s for the embed pass, 12.2 s
-    # for the candidate join). An explicit repartition with a pinned
-    # partition count is exempt from AQE coalescing; the count is derived
-    # from cluster parallelism (conf-driven — scales with the cluster,
-    # not tuned to this box), and hash-partitioning the join inputs by
-    # the bucket key makes the candidate join co-partitioned: zero
-    # additional Exchange inside the join itself.
+    # AQE coalesces a shuffle by BYTE size, the wrong proxy for a
+    # compute-dense stage: a few MB of mention strings collapse to 1-2
+    # partitions and the embed UDF and bucket scoring run nearly serially
+    # (measured: 2 tasks on 32 cores). Repartitions with a pinned,
+    # conf-derived count are exempt. The first is KEYLESS: a same-key
+    # repartition above the distinct is eliminated as redundant, which
+    # re-exposes the embed stage to coalescing. Both cogroup sides are
+    # hash-partitioned by bucket with the same count, so the cogroup adds
+    # no Exchange of its own.
     n_parts = max(
         spark.sparkContext.defaultParallelism,
         int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
     )
-    # KEYLESS round-robin, not repartition(n, "mention"): a same-key
-    # repartition directly above the distinct is eliminated as redundant
-    # (hash partitioning on mention already satisfies the clustering,
-    # whatever its partition count), which silently re-exposes the stage
-    # to AQE's byte-based coalescing — measured: the embed stage ran with
-    # 1-2 tasks despite the "repartition(32)". Round-robin survives and
-    # balances perfectly for a per-row UDF.
-    m_probe = (
+    m_cand = (
         distinct_m.repartition(n_parts)
         .withColumn(
             "__ep",
@@ -545,87 +578,44 @@ def _link_entities_lsh(
         .select(
             "mention",
             F.col("__ep.embedding").alias("embedding"),
-            F.col("__ep.probe_buckets").alias("probe_buckets"),
+            F.explode("__ep.probe_buckets").alias("lsh_bucket"),
         )
-        .localCheckpoint(eager=False)
+        .repartition(n_parts, "lsh_bucket")
     )
-    m_cand = m_probe.select(
-        "mention", "embedding", F.explode("probe_buckets").alias("lsh_bucket")
-    )
-    # ONE signature pass over the catalog (Arrow-vectorized, bit-identical
-    # to similarity.int_hyperplane_signature): c_sig feeds both the
-    # candidate join and the bucket-set semi-join below — the lazy lineage
-    # cut stops each consumer re-running the per-row signature scan.
     c_sig = catalog.select(
         "entity_id",
         "embedding",
         _int_signature_udf(dim, seed, n_planes)(F.col("embedding")).alias(
             "lsh_bucket"
         ),
-    ).localCheckpoint(eager=False)
-    best = F.min_by(
-        F.struct("entity_id", "link_distance"),
-        F.struct("link_distance", "entity_id"),
-    ).alias("__b")
-    # co-partition both join inputs on the bucket key with a pinned count
-    # (see n_parts above): the per-pair cosine is the densest compute of
-    # the whole link — AQE's byte-proxy coalescing must not serialize it,
-    # and matching partitioning means the join itself adds no Exchange.
-    # Results are partitioning-independent: min_by's (distance, entity)
-    # order is total, so the per-mention winner is unique.
-    top1 = (
-        m_cand.repartition(n_parts, "lsh_bucket").alias("m")
-        .join(
-            c_sig.repartition(n_parts, "lsh_bucket").alias("c"),
-            F.col("m.lsh_bucket") == F.col("c.lsh_bucket"),
-        )
-        .select(
-            F.col("m.mention").alias("mention"),
-            F.col("c.entity_id").alias("entity_id"),
-            cosine_distance_expr("m.embedding", "c.embedding", dim=dim).alias(
-                "link_distance"
-            ),
+    ).repartition(n_parts, "lsh_bucket")
+    picked = (
+        m_cand.groupBy("lsh_bucket")
+        .cogroup(c_sig.groupBy("lsh_bucket"))
+        .applyInPandas(
+            _bucket_scorer(LSH_BLOCK_ROWS),
+            "mention string, entity_id bigint, link_distance double, hit boolean",
         )
         .groupBy("mention")
-        .agg(best)
-        .select("mention", "__b.entity_id", "__b.link_distance")
-    )
-    # A mention reaches the rescue tier iff NONE of its probe buckets
-    # holds any catalog row — a per-mention count over (mention, bucket)
-    # pairs left-joined to the catalog's bucket set, no embeddings and no
-    # cosine. Computing misses this way (instead of anti-joining against
-    # top1) keeps the expensive cosine join single-consumer, so it runs
-    # exactly once; the two formulations are equivalent because a mention
-    # appears in top1 iff some probe bucket produced a candidate pair.
-    # The groupBy keeps a NULL mention as one group, where an equi
-    # anti-join would never match it and link it twice.
-    cat_buckets = c_sig.select(F.col("lsh_bucket").alias("__cat_bucket")).distinct()
-    missed = (
-        m_cand.select("mention", "lsh_bucket")
-        .join(cat_buckets, F.col("lsh_bucket") == F.col("__cat_bucket"), "left")
-        .groupBy("mention")
-        .agg(F.count("__cat_bucket").alias("__hits"))
-        .filter(F.col("__hits") == 0)
-        .select("mention")
+        .agg(
+            F.min_by(
+                F.struct("entity_id", "link_distance", "hit"),
+                F.struct(~F.col("hit"), "link_distance", "entity_id"),
+            ).alias("__b")
+        )
+        .select("mention", "__b.*")
     )
     sample = (
         catalog.select("entity_id", "embedding")
-        # seeded pseudo-random subset: unbiased across the id range and
-        # deterministic per seed; limit over this sort is TakeOrdered
         .orderBy(F.xxhash64(F.col("entity_id"), F.lit(seed)), F.col("entity_id"))
         .limit(max_rescue_catalog)
         .toPandas()
     )
     bc = spark.sparkContext.broadcast(_unit_catalog(sample))
-    rescue = missed.withColumn(
-        "__l", _make_link_udf(bc, dim, seed)(F.col("mention"))
-    ).select(
-        "mention",
-        F.col("__l.entity_id"),
-        F.col("__l.link_distance"),
-        F.lit(True).alias("rescued"),
+    out = picked.mapInPandas(
+        _rescue_misses(bc, dim, seed, LSH_BLOCK_ROWS),
+        "mention string, entity_id bigint, link_distance double, rescued boolean",
     )
-    out = top1.withColumn("rescued", F.lit(False)).unionByName(rescue)
     out._semtools_broadcasts = [bc]
     return out
 

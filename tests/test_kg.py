@@ -604,9 +604,12 @@ def test_link_lsh_auto_planes_scale_with_catalog_and_keep_total_recall(spark):
     by_m = {r.mention: r for r in out}
     assert by_m["spark"].entity_id is not None
     assert by_m["table"].entity_id is not None
+
+
+def test_link_lsh_multi_probe_recovers_base_bucket_misses(spark):
     """Forced-miss verification of the multi-probe link path: mentions
     whose EXACT bucket holds no catalog entry but whose flipped-bit probe
-    bucket does must link through tier 1 (bucket join) — their linked
+    bucket does must link through the per-bucket top-1 — their linked
     entity equals the NumPy min over the probe-bucket candidates, which
     for most of them DIFFERS from the global min (so a rescue-path link
     could not fake the assertion). Also: the LSH plan contains no
@@ -739,3 +742,154 @@ def test_link_entities_rescued_column_uniform(spark):
     out = kg.link_entities(mentions, catalog, dim=64)
     assert "rescued" in out.columns
     assert all(not r.rescued for r in out.collect())
+
+
+@st.composite
+def _lsh_cases(draw):
+    """Random LSH-link inputs: a catalog of word-soup names (duplicates at
+    different ids, "" as a zero vector) with ids small or near 2^62;
+    mentions that are catalog names, other word soup, nonsense, "" and
+    NULL; few planes (so buckets are shared), a rescue sample smaller
+    than the catalog and row blocks of 1-3."""
+    words = ["spark", "table", "row", "join", "vector", "hash"]
+    soup = st.lists(st.sampled_from(words), max_size=3).map(" ".join)
+    eids = draw(
+        st.lists(
+            st.one_of(st.integers(0, 60), st.integers((1 << 62) - 100, (1 << 62) - 1)),
+            min_size=1, max_size=12, unique=True,
+        )
+    )
+    names = [draw(soup) for _ in eids]
+    mention = st.one_of(
+        st.none(), st.just(""), st.sampled_from(names), soup,
+        st.text(alphabet="qxzw ", min_size=1, max_size=6),
+    )
+    return {
+        "rows": list(zip(eids, names)),
+        "mentions": draw(st.lists(mention, min_size=1, max_size=25)),
+        "dim": draw(st.sampled_from([16, 64])),
+        "n_planes": draw(st.integers(2, 7)),
+        "n_probes": draw(st.integers(0, 2)),
+        "max_rescue": draw(st.integers(1, len(eids))),
+        "block": draw(st.integers(1, 3)),
+    }
+
+
+def _lsh_reference(case, sample_ids):
+    """Per mention: _unit_catalog + _top1 over the catalog rows in its
+    _plane_buckets probe buckets, or over the rescue sample if those
+    buckets hold none → {mention: (entity_id, link_distance, rescued)}."""
+    import numpy as np
+    import pandas as pd
+
+    from semtools_spark.embedding import HashEmbedder
+    from semtools_spark.operators.similarity import int_plane_weights
+
+    embed = HashEmbedder(dim=case["dim"], seed=kg.DEFAULT_SEED).embed_texts
+    w = int_plane_weights(case["n_planes"], case["dim"], kg.DEFAULT_SEED)
+    eids = np.array([e for e, _ in case["rows"]], dtype=np.int64)
+    cat = embed([n for _, n in case["rows"]])
+    cat_bucket = kg._plane_buckets(cat, w, 0)[:, 0]
+    out = {}
+    for m in set(case["mentions"]):
+        q = embed(["" if m is None else m])
+        sel = np.isin(cat_bucket, kg._plane_buckets(q, w, case["n_probes"])[0])
+        rescued = not sel.any()
+        if rescued:
+            sel = np.isin(eids, sample_ids)
+        ids, matn = kg._unit_catalog(
+            pd.DataFrame({"entity_id": eids[sel], "embedding": list(cat[sel])})
+        )
+        best, dist = kg._top1(q, matn)
+        out[m] = (int(ids[best[0]]), float(dist[0]), rescued)
+    return out
+
+
+def test_link_lsh_tier_equals_numpy_reference(spark, monkeypatch):
+    """Differential: the LSH tier (per-bucket top-1, one row per mention,
+    rescue) returns, for every mention, exactly the (entity_id,
+    link_distance, rescued) of a NumPy reference that runs the same
+    kernel over the union of the mention's probe buckets — bit for bit,
+    because per-row normalization and _top1 do not depend on which other
+    rows are scored. LSH_BLOCK_ROWS is cut to 1-3 so buckets are scored
+    in several blocks. Explicit examples: 30 near-identical names and
+    their mentions packed into a few hot buckets; and, three times, one
+    catalog row in each probe bucket of the zero vector (buckets 0, 1
+    and 2 at 2 planes and 2 probes), so empty mentions tie at distance
+    1.0 across buckets, with the lowest id in a different bucket each
+    time."""
+    from semtools_spark.embedding import HashEmbedder
+    from semtools_spark.operators.similarity import int_plane_weights
+
+    hot = [f"spark table row join vector w{i}" for i in range(30)]
+    examples = [{
+        "rows": [((1 << 62) - 40 + i, n) for i, n in enumerate(hot)] + [(3, hot[4])],
+        "mentions": hot + [n + " hash" for n in hot[:10]] + [None, "", "qq"],
+        "dim": 64, "n_planes": 3, "n_probes": 1, "max_rescue": 5, "block": 2,
+    }]
+    pool = [f"w{i}" for i in range(40)]
+    buckets = kg._plane_buckets(
+        HashEmbedder(dim=16, seed=kg.DEFAULT_SEED).embed_texts(pool),
+        int_plane_weights(2, 16, kg.DEFAULT_SEED), 0,
+    )[:, 0].tolist()
+    per_bucket = [pool[buckets.index(k)] for k in (0, 1, 2)]
+    for k in range(3):
+        examples.append({
+            "rows": [(5 if j == k else 10 + j, n) for j, n in enumerate(per_bucket)],
+            "mentions": [None, "", per_bucket[0]],
+            "dim": 16, "n_planes": 2, "n_probes": 2, "max_rescue": 1, "block": 1,
+        })
+
+    def run(case):
+        monkeypatch.setattr(kg, "LSH_BLOCK_ROWS", case["block"])
+        dim = case["dim"]
+        vecs = HashEmbedder(dim=dim, seed=kg.DEFAULT_SEED).embed_texts(
+            [n for _, n in case["rows"]]
+        )
+        catalog = spark.createDataFrame(
+            [(e, n, [float(x) for x in v]) for (e, n), v in zip(case["rows"], vecs)],
+            "entity_id long, name string, embedding array<float>",
+        )
+        sample_ids = [
+            r.entity_id
+            for r in catalog.orderBy(
+                F.xxhash64("entity_id", F.lit(kg.DEFAULT_SEED)), "entity_id"
+            ).limit(case["max_rescue"]).select("entity_id").collect()
+        ]
+        mentions = spark.createDataFrame(
+            [(m,) for m in case["mentions"]], "mention string"
+        ).distinct()
+        rows = kg._link_entities_lsh(
+            mentions, catalog, dim=dim, seed=kg.DEFAULT_SEED,
+            n_planes=case["n_planes"], n_probes=case["n_probes"],
+            max_rescue_catalog=case["max_rescue"],
+        ).collect()
+        got = {r.mention: (r.entity_id, r.link_distance, r.rescued) for r in rows}
+        assert len(rows) == len(got)
+        assert got == _lsh_reference(case, sample_ids)
+
+    run = given(_lsh_cases())(run)
+    for case in examples:
+        run = example(case)(run)
+    settings(max_examples=6, deadline=None, derandomize=True, database=None)(run)()
+
+
+def test_link_lsh_refuses_nan_catalog_embedding(spark):
+    """A NaN catalog embedding raises on the LSH tier, as it does on the
+    driver and broadcast tiers, also when that row is outside the rescue
+    sample: every bucket's catalog rows pass through _unit_catalog."""
+    catalog = kg.build_entity_catalog(spark, [f"entity {i}" for i in range(40)], dim=16)
+    sampled = catalog.orderBy(
+        F.xxhash64("entity_id", F.lit(kg.DEFAULT_SEED)), "entity_id"
+    ).first().entity_id
+    bad = 1 if sampled == 0 else 0
+    nan = F.array_repeat(F.lit(float("nan")).cast("float"), 16)
+    catalog = catalog.withColumn(
+        "embedding", F.when(F.col("entity_id") == bad, nan).otherwise(F.col("embedding"))
+    )
+    mentions = spark.createDataFrame([("entity 7",)], ["mention"])
+    linked = kg._link_entities_lsh(
+        mentions, catalog, dim=16, seed=kg.DEFAULT_SEED, max_rescue_catalog=1
+    )
+    with pytest.raises(Exception, match="finite"):
+        linked.collect()
