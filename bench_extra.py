@@ -4,11 +4,11 @@ the noop sink, plan capture, webkg per-stage walls, link_lsh phase walls.
 
 Does NOT replace bench.py (frozen). Usage:
 
-  python bench_extra.py plans [out_suffix]   # capture .explain("formatted")
+  python bench_extra.py plans [query ...]    # .explain("formatted") -> plans/
   python bench_extra.py suite [n_repeats]    # noop-sink timings per query
   python bench_extra.py webkg                # pipeline per-stage breakdown
   python bench_extra.py lsh                  # link_lsh plan + count/noop walls
-  python bench_extra.py cc                   # kg_components round timing
+  python bench_extra.py cc                   # kg_components wall + job count
 """
 
 from __future__ import annotations
@@ -22,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from bench import BENCH_QUERIES  # noqa: E402
 
-PLANS_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r09")
+PLANS_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans")
 
 
 def _spark():
@@ -36,20 +36,20 @@ def _sf_dir():
     return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def cmd_plans(suffix: str = "before"):
+def cmd_plans(*names: str):
+    """plans/<query>.txt for each named bench query (default: all)."""
     import __spark_entry__ as entry
 
-    os.makedirs(PLANS_DIR, exist_ok=True)
     spark = _spark()
     qs = entry.queries()
-    for name in BENCH_QUERIES:
+    for name in names or BENCH_QUERIES:
         df = qs[name](spark, _sf_dir())
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        with open(os.path.join(PLANS_DIR, f"{name}_{suffix}.txt"), "w") as f:
+        with open(os.path.join(PLANS_DIR, f"{name}.txt"), "w") as f:
             f.write(plan)
-        print(name, "->", f"{name}_{suffix}.txt")
+        print(name, "->", f"plans/{name}.txt")
     spark.stop()
 
 
@@ -107,7 +107,7 @@ def cmd_lsh():
     plan = linked._sc._jvm.PythonSQLUtils.explainString(
         linked._jdf.queryExecution(), "formatted"
     )
-    with open(os.path.join(os.path.dirname(PLANS_DIR), "link_lsh_150k.txt"), "w") as f:
+    with open(os.path.join(PLANS_DIR, "link_lsh_150k.txt"), "w") as f:
         f.write(plan)
     for b in linked._semtools_broadcasts:
         b.unpersist()
@@ -117,7 +117,8 @@ def cmd_lsh():
 
 
 def cmd_cc():
-    """kg_components with per-round wall clock (monkeypatched probe)."""
+    """The kg_components leaf's distributed CC call: its wall, the Spark
+    jobs it ran (counted from its job group) and the result's rows."""
     from pyspark.sql import functions as F
     from pyspark.sql import Window
 
@@ -131,17 +132,21 @@ def cmd_cc():
         .filter(F.col("prev").isNotNull())
         .select(F.col("prev").alias("src"), F.col("vec_id").alias("dst"))
     )
+    sc = spark.sparkContext
+    sc.setJobGroup("bench_extra-cc", "kg_components connected_components")
     t_all = time.time()
     comp = kg.connected_components(edges, small_graph_threshold=0)
     n = comp.count()
-    print(json.dumps({"total_s": round(time.time() - t_all, 3), "rows": n}))
+    wall = round(time.time() - t_all, 3)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("bench_extra-cc"))
+    print(json.dumps({"total_s": wall, "jobs": jobs, "rows": n}))
     spark.stop()
 
 
 if __name__ == "__main__":
     cmd = sys.argv[1] if len(sys.argv) > 1 else "suite"
     if cmd == "plans":
-        cmd_plans(*(sys.argv[2:3] or ["before"]))
+        cmd_plans(*sys.argv[2:])
     elif cmd == "suite":
         cmd_suite(int(sys.argv[2]) if len(sys.argv) > 2 else 3)
     elif cmd == "webkg":

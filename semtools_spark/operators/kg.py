@@ -20,8 +20,10 @@ Stages (all DataFrame-native; pandas UDFs only at the embedding boundary):
      they link to — a projection of the top-1 link (one row per distinct
      mention), map-only. connected_components (alternating large-star/
      small-star, Kiveris et al., "Connected Components in MapReduce and
-     Beyond", public — O(log n) rounds of hash-join + aggregate) serves
-     graphs whose nodes have more than one edge, e.g. near-dup clusters.
+     Beyond", public — O(log n) rounds of hash-join + aggregate, stopped
+     at the first union of stars, so a star-shaped input runs no round)
+     serves graphs whose nodes have more than one edge, e.g. near-dup
+     clusters.
   4. materialize_graph: triples + node/edge tables written as parquet
      (Iceberg stand-in), partitioned by hash of subject for co-located
      downstream joins.
@@ -655,17 +657,22 @@ def connected_components(
     """(node, component) with component = min node id in the component.
 
     Adaptive execution (the AQE philosophy applied to the iterative loop):
-    if the edge relation is small enough to count cheaply and fits the
-    driver (< ``small_graph_threshold`` rows), run a single-pass
-    union-find on the driver — an O(E α(E)) scan beats ~log(n) rounds of
-    distributed joins whose per-round scheduling cost dwarfs the work.
-    Pass ``small_graph_threshold=0`` to force the distributed path (tests
-    do, and any caller whose edge set is known to be huge).
+    one probe job over the input returns its edge count and whether it
+    is a union of stars. A count within ``small_graph_threshold`` (the
+    rows fit the driver) runs a single-pass union-find on the driver —
+    an O(E α(E)) scan beats ~log(n) rounds of distributed joins whose
+    per-round scheduling cost dwarfs the work. Pass
+    ``small_graph_threshold=0`` to force the distributed path (tests do,
+    and any caller whose edge set is known to be huge).
 
     Alternating large-star / small-star (Kiveris et al., MapReduce CC):
     converges in O(log n) rounds even on long chains (label propagation
-    would need O(diameter)). Each round is groupBy(min) + join, with one
-    lineage cut per round:
+    would need O(diameter)). Rounds keep connectivity, and the fixpoint
+    is stars centred on each component's minimum; with edges oriented
+    u > v that is: every node with an out-edge has exactly one out-edge
+    and no in-edge. The loop stops at the first probe that sees it, so an
+    input that already is one (a link table) runs zero rounds. Each
+    round is groupBy(min) + join, with one lineage cut per round:
 
     * ``checkpoint_dir=None`` (local default): ``localCheckpoint`` — fast,
       but executor loss destroys the blocks and kills the job.
@@ -701,10 +708,10 @@ def connected_components(
 
     def _cut(df: DataFrame, round_no: int) -> DataFrame:
         if checkpoint_dir is None:
-            # lazy checkpoint: the next action (count/sig probe) is the
-            # job that materializes it — one job per round. Freed by the
-            # ContextCleaner once unreferenced (Dataset.unpersist would
-            # not release RDD-level checkpoint blocks anyway).
+            # lazy checkpoint: the next action (the probe) is the job
+            # that materializes it. Freed by the ContextCleaner once
+            # unreferenced (Dataset.unpersist would not release RDD-level
+            # checkpoint blocks anyway).
             return df.localCheckpoint(eager=False)
         path = f"{checkpoint_dir}/cc_round={round_no:05d}"
         df.write.mode("overwrite").parquet(path)
@@ -753,21 +760,37 @@ def connected_components(
             .distinct()
         )
 
+    def _probe(df: DataFrame):
+        # (edge count c, is_star) in one job: out-degree o and degree d per
+        # node over the u and v columns, then one global aggregate
+        ends = F.array(
+            F.struct(F.col("u").alias("n"), F.lit(1).alias("o")),
+            F.struct(F.col("v").alias("n"), F.lit(0).alias("o")),
+        )
+        deg = df.select(F.inline(ends)).groupBy("n").agg(
+            F.sum("o").alias("o"), F.count("*").alias("d")
+        )
+        star = F.bool_and((F.col("o") == 0) | (F.col("d") == 1))
+        return deg.agg(
+            F.coalesce(F.sum("o"), F.lit(0)).alias("c"),
+            F.coalesce(star, F.lit(True)).alias("is_star"),
+        ).first()
+
     def _sig(df: DataFrame):
-        # convergence probe AND input fingerprint: (count, xor-of-hashes)
+        # durable mode's input fingerprint: (count, xor-of-hashes)
         # over the edge set. bit_xor(xxhash64) rather than an arithmetic
         # checksum: SUM over 10^12 rows overflows BIGINT (an error under
         # ANSI mode, silent wraparound otherwise), while XOR is total at
         # any scale and order-insensitive; the relation is distinct each
         # round, so XOR is a sound set fingerprint.
-        return df.agg(
+        r = df.agg(
             F.count("*").alias("c"),
             F.bit_xor(F.xxhash64("u", "v")).alias("s"),
         ).first()
+        return {"c": int(r.c), "s": None if r.s is None else int(r.s)}
 
     start_round = 0
     resumed = None
-    sig0 = None
     if checkpoint_dir is not None:
         latest = _latest_cc_round(spark, checkpoint_dir)
         if latest >= 0:
@@ -778,9 +801,7 @@ def connected_components(
             # oriented edge relation (one job — resume-candidate runs
             # only) and only resume on a match; otherwise clear the dir.
             stored = hfs.read_text(spark, f"{checkpoint_dir}/{CC_INPUT_SIG}")
-            cur = _sig(_oriented())
-            cur_sig = {"c": int(cur.c), "s": int(cur.s) if cur.s is not None else None}
-            if stored is not None and json.loads(stored) == cur_sig:
+            if stored is not None and json.loads(stored) == _sig(_oriented()):
                 resumed = spark.read.parquet(f"{checkpoint_dir}/cc_round={latest:05d}")
                 start_round = latest + 1
             else:
@@ -792,20 +813,11 @@ def connected_components(
         e = _cut(_oriented(), 0)
         start_round = 1
         if checkpoint_dir is not None:
-            s0 = _sig(e)
-            sig0 = s0
-            hfs.write_text(
-                spark,
-                f"{checkpoint_dir}/{CC_INPUT_SIG}",
-                json.dumps(
-                    {"c": int(s0.c), "s": int(s0.s) if s0.s is not None else None}
-                ),
-            )
+            hfs.write_text(spark, f"{checkpoint_dir}/{CC_INPUT_SIG}", json.dumps(_sig(e)))
 
-    if small_graph_threshold > 0 and resumed is None:
-        n_edges = e.count()
-        if n_edges <= small_graph_threshold:
-            return _driver_union_find(e)
+    probe = _probe(e)
+    if small_graph_threshold > 0 and resumed is None and probe.c <= small_graph_threshold:
+        return _driver_union_find(e)
 
     def _min_out(df: DataFrame) -> DataFrame:
         # m(c) = min(Γ(c) ∪ {c}) — with oriented edges every in-neighbor
@@ -852,39 +864,29 @@ def connected_components(
 
     # Local mode probes every 2 rounds but still CUTS lineage every round
     # (lazy checkpoints are free until an action, so one probe job
-    # materializes both rounds' checkpoints back-to-back): half the job
-    # submissions and half the convergence aggregations, with per-round
-    # plan depth unchanged. (The r7 experiment that batched 2 rounds with
-    # a single cut per probe WAS slower — the doubled-depth plan paid
-    # more in codegen + AQE replanning; cutting every round avoids that.)
-    # Durable mode keeps one probe per round — each round is a resume
-    # point and must be written + fingerprinted individually.
+    # materializes both rounds' checkpoints back-to-back); the r7
+    # experiment with one cut per 2 rounds WAS slower — the doubled-depth
+    # plan paid more in codegen + AQE replanning. Durable mode probes
+    # every round — each round is a resume point. A star is its own
+    # fixpoint, so a round run past one leaves the answer unchanged.
     rounds_per_probe = 1 if checkpoint_dir is not None else 2
-    prev_sig = sig0 if sig0 is not None else _sig(e)
     iters_left = max_iterations
     round_no = start_round
-    while iters_left > 0:
+    while not probe.is_star and iters_left > 0:
         k = min(rounds_per_probe, iters_left)
         for _ in range(k):
-            # lineage cut at each round (local: lazy checkpoint so the
-            # next probe is the materializing job; durable: parquet
-            # write + read-back, the resume point)
             e = _cut(_one_round(e), round_no)
             round_no += 1
         iters_left -= k
-        new_sig = _sig(e)
-        if (prev_sig.c, prev_sig.s) == (new_sig.c, new_sig.s):
-            if k == 1:
-                break
-            rounds_per_probe = 1  # confirm convergence one round at a time
-        prev_sig = new_sig
+        probe = _probe(e)
 
-    # At the fixpoint the graph is a union of stars (u → component min):
-    # every non-root has out-edges; roots appear only as targets.
+    # At the fixpoint the graph is a union of stars (u → component min).
+    # comp rows have component < node (v < u) and root rows component =
+    # node, so the union holds no duplicate row.
     m_final = e.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("component"))
     comp = m_final.select(F.col("u").alias("node"), "component")
     roots = comp.select(F.col("component").alias("node"), F.col("component")).distinct()
-    return comp.union(roots).distinct()
+    return comp.union(roots)
 
 
 def _driver_union_find(e: DataFrame) -> DataFrame:

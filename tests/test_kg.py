@@ -6,11 +6,16 @@ O(log n)-round convergence)."""
 import random
 
 import pytest
-from hypothesis import example, given, settings
+from hypothesis import Phase, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from semtools_spark.operators import kg
+
+# Spark-backed hypothesis tests run their examples without the shrink
+# phase: every shrink step is another round of Spark jobs, so a failure
+# would take minutes to report instead of failing on the unshrunk example.
+NO_SHRINK = (Phase.explicit, Phase.generate)
 
 
 def _uf_components(n_nodes, edges):
@@ -80,6 +85,74 @@ def test_cc_two_cliques_bridge(spark):
     a = [(i, j) for i in range(5) for j in range(i + 1, 5)]
     b = [(i, j) for i in range(10, 15) for j in range(i + 1, 15)]
     _check_cc(spark, a + b + [(4, 10)], 15)
+
+
+@st.composite
+def _cc_graphs(draw):
+    """Edge lists built from disjoint parts — star forests with a hub
+    (centres below their spokes, so the part is already the loop's
+    fixpoint), chains over permuted ids (0-5 rounds to converge, so odd
+    and even round counts both occur) and random graphs — plus
+    duplicate, reversed and self-loop edges; ids small or near 2^62."""
+    base = draw(st.sampled_from([0, (1 << 62) - 10_000]))
+    edges = []
+    kinds = st.sampled_from(["star", "chain", "random"])
+    for i, kind in enumerate(draw(st.lists(kinds, min_size=1, max_size=3))):
+        o = base + 1000 * i
+        if kind == "star":
+            sizes = draw(st.lists(st.integers(1, 4), min_size=1, max_size=4))
+            sizes[0] += draw(st.integers(0, 40))  # the hub
+            spokes = iter(range(o + 100, o + 1000))
+            edges += [(o + r, next(spokes)) for r, k in enumerate(sizes) for _ in range(k)]
+        elif kind == "chain":
+            ids = draw(st.permutations(range(draw(st.integers(2, 30)))))
+            edges += [(o + a, o + b) for a, b in zip(ids, ids[1:])]
+        else:
+            node = st.integers(o, o + draw(st.integers(1, 20)))
+            edges += draw(st.lists(st.tuples(node, node), min_size=1, max_size=25))
+    if edges:
+        pick = st.lists(st.sampled_from(edges), max_size=4)
+        edges += draw(pick) + [(b, a) for a, b in draw(pick)]
+        edges += [(a, a) for a, _ in draw(pick)]
+        edges = draw(st.permutations(edges))
+    return edges
+
+
+def test_cc_distributed_equals_driver_union_find(spark):
+    """Differential across the small_graph_threshold cutover: the
+    distributed loop (threshold 0), the driver union-find (the default
+    threshold) and _uf_components agree on every node's component, one
+    row per node, nodes seen only in self-loops absent. Explicit
+    examples: the empty graph; a star forest with a hub, already the
+    fixpoint (zero rounds); a node with out-edges to two roots (no
+    in-edge, yet not a star; 1 round, so the local loop runs one past
+    the star before its probe); a 9-edge chain with duplicate and reversed
+    edges (4 rounds, 2 probes) next to a 2-edge chain."""
+    hi = (1 << 62) - 100
+    stars = [(hi, hi + 1 + i) for i in range(60)] + [(hi + 80, hi + 70), (hi + 70, hi + 81)]
+    stars += [(hi + 81, hi + 70), (hi + 99, hi + 99)]
+    chain = [(i, i + 1) for i in range(9)] + [(3, 2), (7, 8), (50, 51), (51, 52)]
+
+    @settings(
+        max_examples=4, deadline=None, derandomize=True, database=None, phases=NO_SHRINK
+    )
+    @example([])
+    @example(stars)
+    @example([(10, 1), (10, 2), (20, 3), (21, 3)])
+    @example(chain)
+    @given(_cc_graphs())
+    def run(edges):
+        df = spark.createDataFrame(edges, "src bigint, dst bigint")
+        ids = sorted({x for a, b in edges if a != b for x in (a, b)})
+        dense = {x: i for i, x in enumerate(ids)}
+        uf = _uf_components(len(ids), [(dense[a], dense[b]) for a, b in edges if a != b])
+        want = {x: ids[uf[i]] for i, x in enumerate(ids)}
+        for threshold in (0, 200_000):
+            rows = kg.connected_components(df, small_graph_threshold=threshold).collect()
+            got = {r.node: r.component for r in rows}
+            assert len(rows) == len(got) and got == want, f"threshold={threshold}"
+
+    run()
 
 
 @pytest.fixture(scope="module")
@@ -190,7 +263,9 @@ def test_canonicalize_projection_equals_bipartite_cc(spark):
     turn = count()
     hub = [(f"m{i}", 7) for i in range(3000)] + [(None, 7), ("", 9), ("solo", 1 << 40)]
 
-    @settings(max_examples=6, deadline=None, derandomize=True, database=None)
+    @settings(
+        max_examples=6, deadline=None, derandomize=True, database=None, phases=NO_SHRINK
+    )
     @example(hub)
     @given(_link_tables())
     def run(rows):
@@ -871,7 +946,9 @@ def test_link_lsh_tier_equals_numpy_reference(spark, monkeypatch):
     run = given(_lsh_cases())(run)
     for case in examples:
         run = example(case)(run)
-    settings(max_examples=6, deadline=None, derandomize=True, database=None)(run)()
+    settings(
+        max_examples=6, deadline=None, derandomize=True, database=None, phases=NO_SHRINK
+    )(run)()
 
 
 def test_link_lsh_refuses_nan_catalog_embedding(spark):

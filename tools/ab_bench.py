@@ -7,9 +7,10 @@ speed drifts between sessions. Comparing two rounds' JSON files therefore
 measures the machine, not the engine. This harness makes round-over-round
 deltas self-adjudicating:
 
-* the base ref is checked out into a throwaway ``git worktree`` and BOTH
-  checkouts' ``bench.py`` run alternately (A B / B A order flipped per
-  trial) inside one time window, so slow-host minutes hit both sides;
+* the base ref's committed files are exported (``git archive``) into a
+  throwaway directory and BOTH checkouts' ``bench.py`` run alternately
+  (A B / B A order flipped per trial) inside one time window, so
+  slow-host minutes hit both sides;
 * a single-process ALU probe runs before every bench invocation — the
   probe wall is a per-run host-speed stamp, so any residual drift is
   visible in the artifact instead of silently biasing one side;
@@ -18,9 +19,12 @@ deltas self-adjudicating:
 
 Usage:
     python tools/ab_bench.py [--base <ref>] [--trials 2] [--out AB_BENCH.json]
+                             [--sf-dir DIR] [--cpus N]
 
-``--base`` defaults to the latest driver round-commit (message
-"round N: ..."), i.e. the previous round's exact code.
+``--base`` defaults to ``HEAD~1``, the parent of the change under test.
+``--cpus`` defaults to ``$SPARK_GRAFT_CPUS``, else to the CPUs this
+process may run on. The HEAD side runs this checkout as it stands; the
+base side runs the base ref's committed files.
 """
 
 from __future__ import annotations
@@ -28,7 +32,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import re
+import shutil
 import subprocess
 import sys
 import tempfile
@@ -41,14 +45,6 @@ def _git(*args: str, cwd: str = REPO) -> str:
     return subprocess.run(
         ["git", *args], cwd=cwd, capture_output=True, text=True, check=True
     ).stdout.strip()
-
-
-def _default_base() -> str:
-    for line in _git("log", "--format=%H %s").splitlines():
-        sha, _, subject = line.partition(" ")
-        if re.match(r"round \d+:", subject):
-            return sha
-    return _git("rev-parse", "HEAD~1")
 
 
 def _probe_wall() -> float:
@@ -77,17 +73,18 @@ def _run_bench(checkout: str, env: dict) -> dict:
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument("--base", default=None, help="git ref to compare against "
-                    "(default: latest 'round N:' driver commit)")
+    ap.add_argument("--base", default="HEAD~1",
+                    help="git ref to compare against (default: HEAD~1)")
     ap.add_argument("--trials", type=int, default=2,
                     help="interleaved trials per side (best-of is reported)")
     ap.add_argument("--out", default=os.path.join(REPO, "AB_BENCH.json"))
     ap.add_argument("--sf-dir", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ap.add_argument("--cpus", default=os.environ.get(
+        "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))))
     args = ap.parse_args()
 
-    base_ref = args.base or _default_base()
+    base_ref = args.base
     base_sha = _git("rev-parse", base_ref)
     head_sha = _git("rev-parse", "HEAD")
     if base_sha == head_sha:
@@ -99,8 +96,11 @@ def main() -> int:
 
     tmp = tempfile.mkdtemp(prefix="ab_bench_base_")
     base_dir = os.path.join(tmp, "base")
-    _git("worktree", "add", "--detach", base_dir, base_sha)
+    os.makedirs(base_dir)
     try:
+        tarball = os.path.join(tmp, "base.tar")
+        _git("archive", "-o", tarball, base_sha)
+        subprocess.run(["tar", "-xf", tarball, "-C", base_dir], check=True)
         runs: list[dict] = []
         for t in range(args.trials):
             order = [("head", REPO), ("base", base_dir)]
@@ -155,8 +155,7 @@ def main() -> int:
                           ("head", "base", "suite", "per_query")}))
         return 0
     finally:
-        subprocess.run(["git", "worktree", "remove", "--force", base_dir],
-                       cwd=REPO, capture_output=True)
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 if __name__ == "__main__":
