@@ -84,8 +84,7 @@ def main() -> int:
         "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))))
     args = ap.parse_args()
 
-    base_ref = args.base
-    base_sha = _git("rev-parse", base_ref)
+    base_sha = _git("rev-parse", args.base)
     head_sha = _git("rev-parse", "HEAD")
     if base_sha == head_sha:
         print("base == HEAD; nothing to compare", file=sys.stderr)
@@ -133,7 +132,7 @@ def main() -> int:
             for q in sorted(set(h_q) & set(b_q))
         }
         report = {
-            "head": head_sha, "base": base_sha, "base_ref": base_ref,
+            "head": head_sha, "base": base_sha, "base_ref": args.base,
             "sf_dir": args.sf_dir, "cpus": args.cpus, "trials": args.trials,
             "suite": {"head": h_suite, "base": b_suite,
                       "ratio": round(h_suite / b_suite, 3)},
