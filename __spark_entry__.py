@@ -1044,9 +1044,8 @@ def _q_stream_incremental_sync(spark, sf_dir):
 
 
 def _q_stream_windowed(spark, sf_dir):
-    """The streaming windowed aggregation's batch twin — the SAME function
-    the watermarked stream runs (streaming/windows.py), certified here on
-    the static events table (watermark is a no-op on batch input)."""
+    """The events_hourly window stats (streaming/windows.py), certified on
+    the static events table."""
     from semtools_spark.streaming.windows import windowed_event_stats
 
     _utc(spark)

@@ -20,10 +20,11 @@ Stages (all DataFrame-native; pandas UDFs only at the embedding boundary):
      they link to — a projection of the top-1 link (one row per distinct
      mention), map-only. connected_components (alternating large-star/
      small-star, Kiveris et al., "Connected Components in MapReduce and
-     Beyond", public — O(log n) rounds of hash-join + aggregate, stopped
-     at the first union of stars, so a star-shaped input runs no round)
-     serves graphs whose nodes have more than one edge, e.g. near-dup
-     clusters.
+     Beyond", public — O(log n) rounds of hash-join + aggregate, each cut
+     by a lazy localCheckpoint, stopped at the first union of stars, so a
+     star-shaped input runs no round) serves graphs whose nodes have more
+     than one edge, e.g. near-dup clusters. It keeps no state between
+     calls; resume is the pipeline stage manifest's job.
   4. materialize_graph: triples + node/edge tables written as parquet
      (Iceberg stand-in), partitioned by hash of subject for co-located
      downstream joins.
@@ -36,7 +37,6 @@ stage 4 writes partitioned by subj-hash so graph queries co-locate.
 
 from __future__ import annotations
 
-import json
 from collections.abc import Iterator
 
 import numpy as np
@@ -45,7 +45,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from semtools_spark import fs as hfs
 from semtools_spark.embedding import DEFAULT_SEED, HashEmbedder
 
 # Deterministic extraction vocabulary over the synthetic corpora's word
@@ -622,37 +621,17 @@ def _link_entities_lsh(
     return out
 
 
-def _latest_cc_round(spark: SparkSession, checkpoint_dir: str) -> int:
-    """Highest round k with a complete (_SUCCESS-marked) parquet snapshot
-    under ``checkpoint_dir``, or -1 if none."""
-    latest = -1
-    for name, _size, _isdir in hfs.listdir(spark, checkpoint_dir):
-        if name.startswith("cc_round="):
-            k = int(name.split("=", 1)[1])
-            if hfs.exists(spark, f"{checkpoint_dir}/{name}/_SUCCESS") and k > latest:
-                latest = k
-    return latest
-
-
-#: input-fingerprint file inside a CC checkpoint dir — resume is only valid
-#: when the CURRENT call's edge input matches the snapshots' input
-CC_INPUT_SIG = "_input_sig.json"
-
-
-def _clear_cc_checkpoints(spark: SparkSession, checkpoint_dir: str) -> None:
-    for name, _size, _isdir in hfs.listdir(spark, checkpoint_dir):
-        if name.startswith("cc_round=") or name == CC_INPUT_SIG:
-            hfs.delete(spark, f"{checkpoint_dir}/{name}")
+#: round cap of the distributed CC loop. Large-star/small-star converges
+#: in O(log n) rounds, so running out of rounds means a bug, not a big
+#: graph: the loop raises instead of finalizing a non-star edge set.
+CC_MAX_ROUNDS = 30
 
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iterations: int = 30,
     small_graph_threshold: int = 200_000,
-    checkpoint_dir: str | None = None,
-    keep_rounds: int = 2,
 ) -> DataFrame:
     """(node, component) with component = min node id in the component.
 
@@ -672,21 +651,11 @@ def connected_components(
     u > v that is: every node with an out-edge has exactly one out-edge
     and no in-edge. The loop stops at the first probe that sees it, so an
     input that already is one (a link table) runs zero rounds. Each
-    round is groupBy(min) + join, with one lineage cut per round:
-
-    * ``checkpoint_dir=None`` (local default): ``localCheckpoint`` — fast,
-      but executor loss destroys the blocks and kills the job.
-    * ``checkpoint_dir=<shared fs path>`` (the cluster mode the north rule
-      requires): each round's edge relation is written as a
-      ``cc_round=<k>`` parquet snapshot and read back — durable,
-      executor-loss-safe, and a re-invocation with the same dir RESUMES
-      from the latest complete round instead of recomputing (kill
-      mid-loop → rerun → continues). Only the last ``keep_rounds``
-      snapshots are retained. Resume is keyed on an INPUT fingerprint
-      (edge-multiset count+checksum persisted as ``_input_sig.json``):
-      snapshots also survive completed runs, so re-running with changed
-      edges and the same dir clears the stale snapshots and recomputes
-      instead of silently returning the old graph's components.
+    round is groupBy(min) + join, and each round's lineage is cut with a
+    lazy ``localCheckpoint``: executor loss destroys its blocks and fails
+    the job, so a caller that needs resume reruns the stage (the
+    pipeline's stage manifest). A loop that reaches ``CC_MAX_ROUNDS``
+    without a star raises ``RuntimeError``.
 
     Skew (the north rule's "salted keys for hot entities", realized with
     Spark's native mechanisms instead of manual salt columns): a hub
@@ -704,22 +673,6 @@ def connected_components(
 
     Both are exercised by the 5,000-spoke hub test (test_kg.py).
     """
-    spark = edges.sparkSession
-
-    def _cut(df: DataFrame, round_no: int) -> DataFrame:
-        if checkpoint_dir is None:
-            # lazy checkpoint: the next action (the probe) is the job
-            # that materializes it. Freed by the ContextCleaner once
-            # unreferenced (Dataset.unpersist would not release RDD-level
-            # checkpoint blocks anyway).
-            return df.localCheckpoint(eager=False)
-        path = f"{checkpoint_dir}/cc_round={round_no:05d}"
-        df.write.mode("overwrite").parquet(path)
-        stale = round_no - keep_rounds
-        if stale >= 0:
-            hfs.delete(spark, f"{checkpoint_dir}/cc_round={stale:05d}")
-        return spark.read.parquet(path)
-
     def _id_col(c: str):
         # Fail LOUDLY when an id doesn't cast to BIGINT: silently-nulled
         # string ids (e.g. file-path doc keys) would make the u != v
@@ -776,47 +729,13 @@ def connected_components(
             F.coalesce(star, F.lit(True)).alias("is_star"),
         ).first()
 
-    def _sig(df: DataFrame):
-        # durable mode's input fingerprint: (count, xor-of-hashes)
-        # over the edge set. bit_xor(xxhash64) rather than an arithmetic
-        # checksum: SUM over 10^12 rows overflows BIGINT (an error under
-        # ANSI mode, silent wraparound otherwise), while XOR is total at
-        # any scale and order-insensitive; the relation is distinct each
-        # round, so XOR is a sound set fingerprint.
-        r = df.agg(
-            F.count("*").alias("c"),
-            F.bit_xor(F.xxhash64("u", "v")).alias("s"),
-        ).first()
-        return {"c": int(r.c), "s": None if r.s is None else int(r.s)}
-
-    start_round = 0
-    resumed = None
-    if checkpoint_dir is not None:
-        latest = _latest_cc_round(spark, checkpoint_dir)
-        if latest >= 0:
-            # Snapshots survive completed runs (keep_rounds retains the
-            # converged rounds), so resume must be keyed on the INPUT, not
-            # just the dir: resuming another graph's snapshots silently
-            # returns the old graph's components. Fingerprint the current
-            # oriented edge relation (one job — resume-candidate runs
-            # only) and only resume on a match; otherwise clear the dir.
-            stored = hfs.read_text(spark, f"{checkpoint_dir}/{CC_INPUT_SIG}")
-            if stored is not None and json.loads(stored) == _sig(_oriented()):
-                resumed = spark.read.parquet(f"{checkpoint_dir}/cc_round={latest:05d}")
-                start_round = latest + 1
-            else:
-                _clear_cc_checkpoints(spark, checkpoint_dir)
-
-    if resumed is not None:
-        e = resumed
-    else:
-        e = _cut(_oriented(), 0)
-        start_round = 1
-        if checkpoint_dir is not None:
-            hfs.write_text(spark, f"{checkpoint_dir}/{CC_INPUT_SIG}", json.dumps(_sig(e)))
-
+    # lazy checkpoint: the next action (the probe) is the job that
+    # materializes it. Freed by the ContextCleaner once unreferenced
+    # (Dataset.unpersist would not release RDD-level checkpoint blocks
+    # anyway).
+    e = _oriented().localCheckpoint(eager=False)
     probe = _probe(e)
-    if small_graph_threshold > 0 and resumed is None and probe.c <= small_graph_threshold:
+    if small_graph_threshold > 0 and probe.c <= small_graph_threshold:
         return _driver_union_find(e)
 
     def _min_out(df: DataFrame) -> DataFrame:
@@ -862,22 +781,23 @@ def connected_components(
             )
         ).distinct()
 
-    # Local mode probes every 2 rounds but still CUTS lineage every round
-    # (lazy checkpoints are free until an action, so one probe job
-    # materializes both rounds' checkpoints back-to-back); the r7
-    # experiment with one cut per 2 rounds WAS slower — the doubled-depth
-    # plan paid more in codegen + AQE replanning. Durable mode probes
-    # every round — each round is a resume point. A star is its own
-    # fixpoint, so a round run past one leaves the answer unchanged.
-    rounds_per_probe = 1 if checkpoint_dir is not None else 2
-    iters_left = max_iterations
-    round_no = start_round
-    while not probe.is_star and iters_left > 0:
-        k = min(rounds_per_probe, iters_left)
+    # Probe every 2 rounds but still CUT lineage every round (lazy
+    # checkpoints are free until an action, so one probe job materializes
+    # both rounds' checkpoints back-to-back); the r7 experiment with one
+    # cut per 2 rounds WAS slower — the doubled-depth plan paid more in
+    # codegen + AQE replanning. A star is its own fixpoint, so a round run
+    # past one leaves the answer unchanged.
+    rounds_left = CC_MAX_ROUNDS
+    while not probe.is_star:
+        if rounds_left <= 0:
+            raise RuntimeError(
+                f"connected_components: no union of stars after "
+                f"{CC_MAX_ROUNDS} rounds ({probe.c} edges left)"
+            )
+        k = min(2, rounds_left)
         for _ in range(k):
-            e = _cut(_one_round(e), round_no)
-            round_no += 1
-        iters_left -= k
+            e = _one_round(e).localCheckpoint(eager=False)
+        rounds_left -= k
         probe = _probe(e)
 
     # At the fixpoint the graph is a union of stars (u → component min).
@@ -967,29 +887,6 @@ def materialize_graph(
     )
     edges.write.mode("overwrite").parquet(paths["edges"])
     return paths
-
-
-def materialize_graph_bucketed(
-    triples: DataFrame,
-    table: str = "kg_triples_bucketed",
-    num_buckets: int = 32,
-) -> str:
-    """Catalog-backed bucketed materialization: ``bucketBy(subj)`` +
-    ``sortBy(subj)`` ``saveAsTable`` so every downstream subj-equi-join or
-    subj-aggregation over the graph is CO-LOCATED — Spark reads the
-    bucket spec from the catalog and plans the join with zero Exchange on
-    the bucketed side (the hash-partition-by-subj-hash directory layout
-    in :func:`materialize_graph` is the catalog-less stand-in; this is
-    the real thing wherever a metastore/warehouse exists, incl. plain
-    local ``spark-warehouse``). Returns the table name."""
-    (
-        triples.write.mode("overwrite")
-        .bucketBy(num_buckets, "subj")
-        .sortBy("subj")
-        .format("parquet")
-        .saveAsTable(table)
-    )
-    return table
 
 
 def kg_pipeline(

@@ -6,12 +6,10 @@ Mirrors the reference's parse pipeline shape (semtools src/parse/):
   P1 extension passthrough  — already-readable files skip extraction
                               (reference cache.rs:24-53); here the ``.txt``
                               urls whose html column holds raw text bytes.
-  P2 parse-cache probe      — anti-join incoming pages against the parse
-                              manifest on (url, size, ts) so only new or
-                              changed pages re-parse (reference
-                              cache.rs:55-75); Spark-side this is a
-                              left-anti join, not a per-file stat call.
-  P3/P4 extraction          — the reference calls a remote LlamaParse API
+  P2 parse-cache probe      — per stage, not per page: pipeline.py's
+                              checkpoint manifest skips a committed parse
+                              stage whose input fingerprint is unchanged.
+  P3/P4 extraction         — the reference calls a remote LlamaParse API
                               (client.rs:290-433); we pin a deterministic
                               local extractor (no network) run as a
                               vectorized Arrow UDF over the binary column.
@@ -165,60 +163,3 @@ def parse_pages(pages: DataFrame, extractor=None) -> DataFrame:
         "url", "warc_ts", "lang", text_expr.alias("text")
     )
     return pass_df.unionByName(parse_df)
-
-
-def images_only_udf():
-    """Arrow-batched ``binary -> boolean``: True for image-only (scanned)
-    PDFs — every page drew pixels, none drew text. See
-    :func:`pdf_extract.pdf_images_only`."""
-    from semtools_spark.operators.pdf_extract import pdf_images_only
-
-    @F.pandas_udf(T.BooleanType())
-    def _flag(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in batches:
-            yield s.map(lambda b: pdf_images_only(bytes(b)) if b is not None else False)
-
-    return _flag
-
-
-def flag_scanned(pages: DataFrame, html_col: str = "html") -> DataFrame:
-    """Add an ``images_only`` boolean column marking scanned (image-only)
-    PDFs, so a pipeline can ROUTE them — to an OCR branch, a quarantine
-    sink, or an honest per-url limitation record — instead of conflating
-    "extracted empty" with "had no content". The reference handles these
-    inside its OCR-capable remote parse (src/parse/client.rs:290-433);
-    with no OCR in scope the flag is the routing seam. Column-append
-    only: no shuffle, schema of every existing column unchanged."""
-    return pages.withColumn("images_only", images_only_udf()(F.col(html_col)))
-
-
-def parse_incremental(
-    pages: DataFrame, manifest: DataFrame | None, extractor=None
-) -> tuple[DataFrame, DataFrame]:
-    """P2: anti-join incoming pages against the parse manifest so only
-    new/changed urls flow to the extractor (reference cache probe,
-    cache.rs:55-75, as a relational op instead of per-file stats).
-
-    manifest schema: (url, size_bytes, warc_ts). A page re-parses when its
-    url is absent or its (size_bytes, warc_ts) differ — the reference's
-    (mtime, size) equality check.
-
-    Returns (parsed_new, manifest_rows_for_new).
-    """
-    incoming = pages.withColumn("size_bytes", F.octet_length("html"))
-    if manifest is not None:
-        m = manifest.select(
-            F.col("url").alias("m_url"),
-            F.col("size_bytes").alias("m_size"),
-            F.col("warc_ts").alias("m_ts"),
-        )
-        incoming = incoming.join(
-            m,
-            (incoming.url == m.m_url)
-            & (incoming.size_bytes == m.m_size)
-            & (incoming.warc_ts == m.m_ts),
-            "left_anti",
-        )
-    parsed = parse_pages(incoming.drop("size_bytes"), extractor=extractor)
-    manifest_rows = incoming.select("url", "size_bytes", "warc_ts")
-    return parsed, manifest_rows

@@ -771,36 +771,8 @@ def _fonts_of(resources, objects) -> dict[str, _Font]:
     return fonts
 
 
-def _collect_xobjects(resources, objects) -> "dict[str, tuple]":
-    """The page's (or a form's) /XObject dict as a draw-dispatch map:
-    ``name -> ("img", None)`` for /Subtype /Image, ``name -> ("form",
-    (dict, raw_stream, resources))`` for /Subtype /Form (stream decode
-    deferred until the form is actually drawn). A form without its own
-    /Resources inherits the enclosing one (ISO 32000-1 §8.10.1)."""
-    out: dict[str, tuple] = {}
-    res = _resolve(resources, objects)
-    if not isinstance(res, dict):
-        return out
-    xdict = _resolve(res.get("XObject"), objects)
-    if not isinstance(xdict, dict):
-        return out
-    for name, xref in xdict.items():
-        num = xref.num if isinstance(xref, _Ref) else None
-        if num is None or num not in objects:
-            continue
-        xval, raw = objects[num]
-        if not isinstance(xval, dict):
-            continue
-        sub = xval.get("Subtype")
-        if sub == "Image":
-            out[name] = ("img", None)
-        elif sub == "Form" and raw is not None:
-            out[name] = ("form", (xval, raw, xval.get("Resources", resources)))
-    return out
-
-
-def _page_streams(objects) -> "list[tuple[bytes, dict[str, _Font], object]]":
-    """``(decoded content, fonts, resources)`` per page in page order
+def _page_streams(objects) -> "list[tuple[bytes, dict[str, _Font]]]":
+    """``(decoded content, fonts)`` per page in page order
     (catalog-tree walk; file order as the repair fallback).
     ``/Resources`` is an inheritable page attribute (ISO 32000-1
     §7.7.3.4), so the walk threads the nearest ancestor's down to leaves
@@ -849,10 +821,7 @@ def _page_streams(objects) -> "list[tuple[bytes, dict[str, _Font], object]]":
             for _num, (val, _s) in sorted(objects.items())
             if isinstance(val, dict) and val.get("Type") == "Page"
         ]
-    out: list[tuple[bytes, dict[str, _Font], object]] = []
-    for p, res in pages:
-        out.append((b"\n".join(content_of(p)), _fonts_of(res, objects), res))
-    return out
+    return [(b"\n".join(content_of(p)), _fonts_of(res, objects)) for p, res in pages]
 
 
 #: a TJ kerning adjustment more negative than this (thousandths of an em)
@@ -861,12 +830,10 @@ TJ_WORD_GAP = -180
 
 
 def _content_ops(stream: bytes):
-    """The content stream's operator/operand tokenizer, shared by text
-    assembly (:func:`_text_from_content`), the image-draw scan
-    (:func:`_draws_image`) and the text short-circuit
-    (:func:`_shows_text`) so there is exactly ONE copy of the token
-    grammar. Yields ``(op, operands)``; the operands list is reused
-    across yields — consume it before advancing."""
+    """The content stream's operator/operand tokenizer behind text
+    assembly (:func:`_text_from_content`). Yields ``(op, operands)``; the
+    operands list is reused across yields — consume it before
+    advancing."""
     operands: list = []
     i = 0
     n = len(stream)
@@ -950,112 +917,11 @@ def extract_pdf_text(data: bytes) -> str:
     try:
         objects = _scan_objects(data)
         page_texts = [
-            _text_from_content(s, fonts) for s, fonts, _res in _page_streams(objects)
+            _text_from_content(s, fonts) for s, fonts in _page_streams(objects)
         ]
     except Exception:
         return ""
     return "\n\n".join(t for t in page_texts if t)
-
-
-def _draws_image(stream: bytes, xobjs: "dict[str, tuple]", objects,
-                 depth: int = 0, _memo: "dict | None" = None) -> bool:
-    """True when the content stream executes an image draw: an inline
-    image (``BI … ID``, ISO 32000-1 §8.9.7), a ``name Do`` of an image
-    XObject, or — recursively — a drawn Form XObject whose own content
-    draws one (scan producers commonly wrap the page image in a form).
-    Short-circuits on the first hit; form streams decode lazily, only
-    when actually drawn. Each form's verdict is MEMOIZED by its raw
-    stream identity — without that, k nested forms each drawn N times
-    cost N^k re-scans (a few-KB hostile document = minutes of CPU), and
-    the pre-seeded False also terminates draw cycles."""
-    if _memo is None:
-        _memo = {}
-    for op, operands in _content_ops(stream):
-        if op == b"BI":
-            return True
-        if op == b"Do" and operands and isinstance(operands[-1], str):
-            entry = xobjs.get(operands[-1])
-            if entry is None:
-                continue
-            kind, payload = entry
-            if kind == "img":
-                return True
-            if depth < 8:  # form: recurse with its own resource scope
-                fdict, raw, fres = payload
-                key = id(raw)
-                if key in _memo:
-                    if _memo[key]:
-                        return True
-                    continue
-                _memo[key] = False  # in-progress: a self-draw is a no-op
-                dec = _decode_stream(fdict, raw, objects)
-                if dec is not None and _draws_image(
-                    dec, _collect_xobjects(fres, objects), objects,
-                    depth + 1, _memo
-                ):
-                    _memo[key] = True
-                    return True
-    return False
-
-
-def _shows_text(stream: bytes, fonts: "dict[str, _Font]") -> bool:
-    """True on the FIRST show operator that decodes to any text — the
-    short-circuit twin of :func:`_text_from_content` for flag probing
-    (same grammar via :func:`_content_ops`, same font/decoder state, no
-    line assembly, no full-document cost)."""
-    font = _LATIN1_FONT
-    for op, operands in _content_ops(stream):
-        if op in (b"Tj", b"'", b'"') and operands and isinstance(operands[-1], bytes):
-            if font.decode(operands[-1]):
-                return True
-        elif op == b"TJ" and operands and isinstance(operands[-1], list):
-            for el in operands[-1]:
-                if isinstance(el, bytes) and font.decode(el):
-                    return True
-        elif op == b"Tf" and len(operands) >= 2 and isinstance(operands[-2], str):
-            font = fonts.get(operands[-2], _LATIN1_FONT)
-    return False
-
-
-def pdf_page_flags(data: bytes) -> "list[tuple[bool, bool]]":
-    """Per page in page order: ``(has_text, has_image_draw)``. The
-    scanned-document signature is pages with images and no text — the
-    reference routes such documents through its OCR-capable remote parse
-    (src/parse/client.rs:290-433); this sandbox has no OCR, so the flag
-    is the honest machine-readable limitation marker that lets a pipeline
-    route image-only documents instead of silently storing "" for them.
-    Both probes short-circuit at the first glyph / first draw — the flag
-    costs a token scan, not a second full extraction. ``has_text``
-    deliberately sees the PAGE stream only (the extractor's own view, so
-    the flag stays consistent with what extraction returned); the image
-    probe recurses into drawn Form XObjects. Malformed input degrades to
-    ``[]``, never an exception."""
-    if not is_pdf(data):
-        return []
-    try:
-        objects = _scan_objects(data)
-        return [
-            (
-                _shows_text(s, fonts),
-                _draws_image(s, _collect_xobjects(res, objects), objects),
-            )
-            for s, fonts, res in _page_streams(objects)
-        ]
-    except Exception:
-        return []
-
-
-def pdf_images_only(data: bytes) -> bool:
-    """True when the document is a PDF with ≥1 page, NO page yields any
-    text, and ≥1 page draws an image — i.e. extraction returned "" not
-    because the document is empty but because its content is pixels
-    (a scan). Routing predicate for an OCR branch / quarantine sink."""
-    flags = pdf_page_flags(data)
-    return (
-        bool(flags)
-        and not any(has_text for has_text, _ in flags)
-        and any(has_img for _, has_img in flags)
-    )
 
 
 def extract_any(data: bytes) -> str:

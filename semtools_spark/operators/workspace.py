@@ -715,12 +715,24 @@ def _swap_buckets(
     hfs.delete(spark, tmp)
 
 
+def _refuse_unbucketed(spark: SparkSession, table_path: str) -> None:
+    """Raise on a table that holds files but no bucket: the unbucketed
+    whole-table layout is neither read nor rewritten here, so its files
+    stay exactly as they are."""
+    if hfs.exists(spark, table_path) and hfs.listdir(spark, table_path):
+        raise IOError(
+            f"{table_path} is an unbucketed table (no generation pointer, "
+            f"no {BUCKET_COL}= partitions): merge_upsert and delete_keys "
+            "only maintain the bucketed layout; rewrite it bucketed first"
+        )
+
+
 def merge_upsert(
     spark: SparkSession,
     table_path: str,
     updates: DataFrame,
     key_cols: tuple[str, ...],
-    num_buckets: int | None = None,
+    num_buckets: int,
     replace_cols: tuple[str, ...] | None = None,
 ) -> None:
     """Emulated ``MERGE INTO table USING updates ON keys WHEN MATCHED
@@ -728,21 +740,17 @@ def merge_upsert(
     identical updates yields the same table (the reference gets this from
     FNV-1a content ids, store.rs:972-975).
 
-    ``num_buckets=None``: legacy whole-table layout — kept = target ⟕̸
-    updates (left anti), result = kept ∪ updates, one atomic directory
-    swap. O(table) per MERGE.
-
-    ``num_buckets=N``: **bucket-scoped MERGE** — the table lives as hive
-    partitions ``__bucket=pmod(xxhash64(key), N)`` and an upsert rewrites
+    **Bucket-scoped MERGE**: the table lives as hive partitions
+    ``__bucket=pmod(xxhash64(key), num_buckets)`` and an upsert rewrites
     ONLY the buckets containing updated keys: read those partitions
     (partition-pruned scan), anti-join ∪ updates within them, swap just
     those bucket directories. An incremental sync touching 0.1% of keys
     rewrites ~0.1% of the table instead of 100% of it — O(delta), the
     reference's point-upsert store (store.rs:373-434) re-expressed as a
-    partitioned-table MERGE. A legacy unbucketed table is migrated to the
-    bucketed layout on its first bucketed MERGE (one full rewrite).
-    Buckets are keyed on ``key_cols[0]`` so composite-key tables (doc,
-    line_no) co-locate with their doc-keyed manifest.
+    partitioned-table MERGE. Buckets are keyed on ``key_cols[0]`` so
+    composite-key tables (doc, line_no) co-locate with their doc-keyed
+    manifest. An existing unbucketed table raises (see
+    :func:`_refuse_unbucketed`).
 
     ``replace_cols``: WHEN MATCHED **replace scope** — the anti-join that
     evicts old rows runs on these columns instead of the full key. The
@@ -767,35 +775,12 @@ def merge_upsert(
             "buckets the update touches"
         )
     anti_cols = list(replace_cols or key_cols)
-    if num_buckets is None:
-        if hfs.exists(spark, table_path):
-            target = _read_snapshot(spark, table_path)
-            kept = target.join(
-                updates.select(*anti_cols).distinct(), anti_cols, "left_anti"
-            )
-            merged = kept.unionByName(updates.select(*target.columns))
-        else:
-            merged = updates
-        _atomic_overwrite(merged, table_path)
-        return
-
     key = key_cols[0]
     upd = updates.withColumn(BUCKET_COL, _bucket_expr(key, num_buckets))
     existing = _bucket_ids(spark, table_path) if hfs.exists(spark, table_path) else []
     if not existing:
-        if hfs.exists(spark, table_path) and hfs.listdir(spark, table_path):
-            # legacy unbucketed table: one-time migration into the
-            # bucketed layout (full rewrite, atomic whole-dir swap)
-            target = _read_snapshot(spark, table_path)
-            kept = target.join(
-                updates.select(*anti_cols).distinct(), anti_cols, "left_anti"
-            )
-            merged = kept.unionByName(updates.select(*target.columns)).withColumn(
-                BUCKET_COL, _bucket_expr(key, num_buckets)
-            )
-        else:
-            merged = upd
-        _atomic_overwrite(merged, table_path, partition_by=BUCKET_COL)
+        _refuse_unbucketed(spark, table_path)
+        _atomic_overwrite(upd, table_path, partition_by=BUCKET_COL)
         # adopt the snapshot-isolated generation layout from day one
         # (renames only; subsequent MERGEs commit via the pointer)
         _gen_init_from_flat(spark, table_path)
@@ -817,25 +802,18 @@ def delete_keys(
     table_path: str,
     keys: DataFrame,
     key_cols: tuple[str, ...],
-    num_buckets: int | None = None,
+    num_buckets: int,
 ) -> int:
     """W7: DELETE FROM table WHERE keys IN (...) via anti-join rewrite.
-    Returns rows deleted. With ``num_buckets`` set and a bucketed table,
-    only the buckets containing deleted keys are read and rewritten
-    (O(delta), same contract as :func:`merge_upsert`)."""
+    Returns rows deleted. Only the buckets containing deleted keys are
+    read and rewritten (O(delta), same contract as
+    :func:`merge_upsert`); an unbucketed table raises."""
     _sweep_stale_swap_dirs(spark, table_path)  # repair before the read (see merge_upsert)
     if not hfs.exists(spark, table_path):
         return 0
-    bucketed = num_buckets is not None and _bucket_ids(spark, table_path)
-    if not bucketed:
-        target = _read_snapshot(spark, table_path)
-        before = target.count()
-        kept = target.join(
-            keys.select(*key_cols).distinct(), list(key_cols), "left_anti"
-        )
-        n_kept = kept.count()
-        _atomic_overwrite(kept, table_path)
-        return before - n_kept
+    if not _bucket_ids(spark, table_path):
+        _refuse_unbucketed(spark, table_path)
+        return 0
 
     key = key_cols[0]
     kb = keys.select(*key_cols).distinct().withColumn(
@@ -989,11 +967,17 @@ class Workspace:
                         f"mismatch the stored embeddings (delete the "
                         f"workspace or omit {name} to use the stored value)"
                     )
+            if "n_buckets" not in cfg:
+                # written before bucketing: its tables are unbucketed,
+                # which no mutation here maintains — refuse, touch nothing
+                raise IOError(
+                    f"workspace at {root} has no n_buckets in its "
+                    f"{self.CONFIG_FILE}: its tables use the unbucketed "
+                    f"layout, which is no longer maintained"
+                )
             self.dim = cfg["dim"]
             self.seed = cfg["seed"]
-            # pre-r4 workspaces carry no n_buckets: 16 triggers the
-            # one-time legacy→bucketed migration on their next MERGE
-            self.n_buckets = cfg.get("n_buckets", 16)
+            self.n_buckets = cfg["n_buckets"]
         else:
             # A populated workspace with NO config is corruption (e.g. a
             # crashed config rewrite, or a hand-deleted file): adopting the

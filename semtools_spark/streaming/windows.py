@@ -1,17 +1,14 @@
-"""Streaming windowed aggregation with late-data handling.
+"""Windowed event statistics: the events_hourly gate as one batch
+aggregation.
 
-The batch engine's events_hourly gate (hourly count/sum per event_type)
-lifted onto Structured Streaming: event-time tumbling windows with a
-watermark bounding how late an event may arrive and state size. The
-same aggregation expressions as the batch path — one code shape, two
-execution modes (the property the incremental workspace stream also
-keeps).
+Hourly (or any tumbling-window) count/sum per event_type over a static
+events relation. Streaming lives in the sibling modules (sessions,
+kg_ingest, incremental); this aggregation has no streaming runner, so it
+takes no watermark.
 
-Scale notes: the windowed aggregation shuffles on (window, event_type);
-the watermark bounds state to (windows within the lateness horizon ×
-event types) per key, so state is O(horizon), not O(stream). Output in
-``append`` mode emits each window exactly once, when the watermark
-passes its end — the late-data-safe mode for downstream sinks.
+Scale notes: the aggregation shuffles once on (window, event_type) with
+map-side partial aggregation, so a hot event type costs map work, not a
+hot reducer.
 """
 
 from __future__ import annotations
@@ -24,20 +21,15 @@ def windowed_event_stats(
     events: DataFrame,
     *,
     window: str = "1 hour",
-    watermark: str = "30 minutes",
     ts_col: str = "ts",
     type_col: str = "event_type",
     value_col: str = "value",
 ) -> DataFrame:
-    """Tumbling event-time window stats over a (streaming or batch)
-    events relation: (window_start, window_end, event_type, n,
-    sum_value_centi). Works identically on a static DataFrame (watermark
-    is a no-op there) — the batch twin of the events_hourly gate."""
-    src = events
-    if events.isStreaming:
-        src = events.withWatermark(ts_col, watermark)
+    """Tumbling event-time window stats over a batch events relation:
+    (window_start, window_end, event_type, n, sum_value_centi) — the
+    Spark side of the events_hourly gate."""
     return (
-        src.groupBy(F.window(F.col(ts_col), window).alias("w"), F.col(type_col))
+        events.groupBy(F.window(F.col(ts_col), window).alias("w"), F.col(type_col))
         .agg(
             F.count("*").alias("n"),
             F.sum(F.floor(F.col(value_col) * 100).cast("long")).alias(
@@ -52,62 +44,3 @@ def windowed_event_stats(
             "sum_value_centi",
         )
     )
-
-
-def run_windowed_stats_available(
-    spark,
-    source_dir: str,
-    checkpoint_dir: str,
-    schema,
-    *,
-    window: str = "1 hour",
-    watermark: str = "30 minutes",
-    query_name: str = "windowed_event_stats",
-) -> DataFrame:
-    """Drain pending event files through the windowed aggregation into an
-    in-memory sink (complete mode: every window's current value, the
-    inspectable surface for tests/backfills). Returns the result table."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    agg = windowed_event_stats(stream, window=window, watermark=watermark)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
-
-
-def run_windowed_stats_append(
-    spark,
-    source_dir: str,
-    checkpoint_dir: str,
-    out_dir: str,
-    schema,
-    *,
-    window: str = "1 hour",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Drain pending event files in APPEND mode into a parquet sink: a
-    window's row is written exactly once, when the watermark passes its
-    end — the late-data-safe exactly-once surface the module docstring
-    claims, suitable for downstream file/lakehouse sinks (complete-mode
-    memory tables are the inspection surface, not the delivery one).
-    Call repeatedly as new files land; the checkpoint carries watermark
-    and sink state across drains. Returns the accumulated sink table."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    agg = windowed_event_stats(stream, window=window, watermark=watermark)
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # schema-pinned read: valid even before the first window is emitted
-    return spark.read.schema(agg.schema).parquet(out_dir)

@@ -306,49 +306,6 @@ def test_materialize_graph(spark, tri_docs, tmp_path):
     assert {r.name for r in nodes.collect()} == {"spark", "table", "row", "customer", "order"}
 
 
-def test_cc_durable_checkpoint_resume(spark, tmp_path):
-    """North-rule resumability inside the CC loop: kill mid-iteration
-    (simulated by capping max_iterations), re-invoke with the same
-    checkpoint dir, and the loop continues from the latest durable round
-    snapshot to the correct fixpoint."""
-    import os
-
-    edges = [(i, i + 1) for i in range(120)] + [(500 + i, 501 + i) for i in range(40)]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    want = {
-        r.node: r.component
-        for r in kg.connected_components(df, small_graph_threshold=0).collect()
-    }
-
-    ckpt = str(tmp_path / "cc_ckpt")
-    # phase 1: 'killed' after 2 rounds — partial progress is durable
-    kg.connected_components(
-        df, small_graph_threshold=0, max_iterations=2, checkpoint_dir=ckpt
-    ).collect()
-    rounds_after_kill = {d for d in os.listdir(ckpt) if d.startswith("cc_round=")}
-    assert rounds_after_kill, "no durable round snapshots written"
-
-    # phase 2: resume — must pick up from the snapshot, not recompute,
-    # and reach the same fixpoint as the uncheckpointed run
-    got = {
-        r.node: r.component
-        for r in kg.connected_components(
-            df, small_graph_threshold=0, checkpoint_dir=ckpt
-        ).collect()
-    }
-    assert got == want
-    # resume continued the round numbering past the killed run
-    max_round = max(
-        int(d.split("=")[1]) for d in os.listdir(ckpt) if d.startswith("cc_round=")
-    )
-    assert max_round > max(
-        int(d.split("=")[1]) for d in rounds_after_kill
-    )
-    # retention: only keep_rounds snapshots remain
-    left = [d for d in os.listdir(ckpt) if d.startswith("cc_round=")]
-    assert len(left) <= 2
-
-
 def test_sql_list_escapes_quotes(spark):
     """Vocabulary entries containing quotes must not break (or inject
     into) the generated membership SQL."""
@@ -378,71 +335,6 @@ def test_cc_hub_skew_star(spark):
     assert all(got[10_000 + i] == 10_000 for i in range(51))
 
 
-def test_cc_checkpoint_stale_input_cleared(spark, tmp_path):
-    """Resume is keyed on the INPUT fingerprint: snapshots left behind by a
-    COMPLETED run on graph A must not be resumed when the same checkpoint
-    dir is reused for graph B (the re-run-with-changed-edges workflow) —
-    previously this silently returned A's components."""
-    ckpt = str(tmp_path / "cc_ckpt_stale")
-    edges_a = [(i, i + 1) for i in range(50)]  # one chain: component 0
-    df_a = spark.createDataFrame(edges_a, ["src", "dst"])
-    got_a = {
-        r.node: r.component
-        for r in kg.connected_components(
-            df_a, small_graph_threshold=0, checkpoint_dir=ckpt
-        ).collect()
-    }
-    assert set(got_a.values()) == {0}
-
-    # graph B: two disjoint chains over different node ids
-    edges_b = [(1000 + i, 1001 + i) for i in range(20)] + [
-        (2000 + i, 2001 + i) for i in range(20)
-    ]
-    df_b = spark.createDataFrame(edges_b, ["src", "dst"])
-    want_b = {
-        r.node: r.component
-        for r in kg.connected_components(df_b, small_graph_threshold=0).collect()
-    }
-    got_b = {
-        r.node: r.component
-        for r in kg.connected_components(
-            df_b, small_graph_threshold=0, checkpoint_dir=ckpt
-        ).collect()
-    }
-    assert got_b == want_b  # B's graph, not A's stale snapshots
-
-
-def test_cc_checkpoint_same_input_resumes(spark, tmp_path):
-    """Matching fingerprint still resumes: a second invocation with the
-    SAME edges reuses the converged snapshot (round numbering advances
-    past the first run's)."""
-    import os
-
-    ckpt = str(tmp_path / "cc_ckpt_same")
-    edges = [(i, i + 1) for i in range(60)]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    kg.connected_components(
-        df, small_graph_threshold=0, max_iterations=2, checkpoint_dir=ckpt
-    ).collect()
-    assert os.path.exists(os.path.join(ckpt, kg.CC_INPUT_SIG))
-    rounds1 = {d for d in os.listdir(ckpt) if d.startswith("cc_round=")}
-    got = {
-        r.node: r.component
-        for r in kg.connected_components(
-            df, small_graph_threshold=0, checkpoint_dir=ckpt
-        ).collect()
-    }
-    want = {
-        r.node: r.component
-        for r in kg.connected_components(df, small_graph_threshold=0).collect()
-    }
-    assert got == want
-    max_round = max(
-        int(d.split("=")[1]) for d in os.listdir(ckpt) if d.startswith("cc_round=")
-    )
-    assert max_round > max(int(d.split("=")[1]) for d in rounds1)
-
-
 def test_cc_non_numeric_ids_raise(spark):
     """String ids that don't cast to BIGINT must fail loudly, not silently
     null out and return an empty result."""
@@ -451,6 +343,16 @@ def test_cc_non_numeric_ids_raise(spark):
     )
     with pytest.raises(Exception, match="BIGINT"):
         kg.connected_components(df, small_graph_threshold=0).collect()
+
+
+def test_cc_round_cap_raises(spark, monkeypatch):
+    """A loop that runs out of rounds before its edges form a union of
+    stars raises: finalizing the non-star edge set would split one
+    301-node chain into hundreds of components without a word."""
+    monkeypatch.setattr(kg, "CC_MAX_ROUNDS", 1)
+    df = spark.createDataFrame([(i, i + 1) for i in range(300)], ["src", "dst"])
+    with pytest.raises(RuntimeError, match="no union of stars after 1 rounds"):
+        kg.connected_components(df, small_graph_threshold=0)
 
 
 def test_link_entities_lsh_path(spark):
@@ -618,27 +520,6 @@ def test_link_udf_closure_holds_no_matrix(spark):
     captured = [c.cell_contents for c in (fn.__closure__ or ())]
     assert not any(isinstance(c, np.ndarray) for c in captured)
     assert any(type(c).__name__ == "Broadcast" for c in captured)
-
-
-def test_bucketed_graph_join_has_no_shuffle(spark, tri_docs):
-    """materialize_graph_bucketed: a subj-equi-join of the bucketed table
-    with itself plans WITHOUT any shuffle Exchange — the bucket spec from
-    the catalog co-locates both sides (broadcast disabled to force the
-    merge-join path the assertion is about)."""
-    triples = kg.extract_triples(tri_docs)
-    name = kg.materialize_graph_bucketed(triples, table="t_kg_bucketed_test",
-                                         num_buckets=4)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760b")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        t = spark.table(name)
-        j = t.alias("a").join(t.alias("b"), "subj")
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert j.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 def test_graph_canon_join_strategy_is_aqe_chosen(spark, tri_docs):

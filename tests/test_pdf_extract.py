@@ -472,141 +472,3 @@ def test_incremental_update_supersedes_stream_object():
     )
     assert PX._scan_objects(data2)[2][1] == b"new"
 
-
-def _pdf_image_page(content: bytes) -> bytes:
-    img = b"\xff\x00\x7f"
-    return (
-        b"%PDF-1.4\n"
-        b"1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n"
-        b"2 0 obj << /Type /Pages /Count 1 /Kids [3 0 R] >> endobj\n"
-        b"3 0 obj << /Type /Page /Parent 2 0 R /Resources "
-        b"<< /XObject << /Im0 5 0 R >> >> /Contents 4 0 R >> endobj\n"
-        b"4 0 obj << /Length " + str(len(content)).encode()
-        + b" >> stream\n" + content + b"\nendstream endobj\n"
-        b"5 0 obj << /Subtype /Image /Width 1 /Height 1 /Length "
-        + str(len(img)).encode() + b" >> stream\n" + img
-        + b"\nendstream endobj\n"
-    )
-
-
-def test_images_only_flags_scanned_pdf():
-    """VERDICT r7 missing #2: a page whose content stream only draws an
-    image XObject extracts empty — the flag distinguishes that scan from
-    a genuinely empty document so the pipeline can route it (OCR branch /
-    quarantine) instead of silently storing ""."""
-    scanned = _pdf_image_page(b"q 100 0 0 100 0 0 cm /Im0 Do Q")
-    assert PX.extract_pdf_text(scanned) == ""
-    assert PX.pdf_page_flags(scanned) == [(False, True)]
-    assert PX.pdf_images_only(scanned) is True
-    # inline image (BI ... ID ... EI) counts as a draw too
-    inline = _pdf_image_page(b"BI /W 1 /H 1 ID \xff\x00\x7f EI")
-    assert PX.pdf_images_only(inline) is True
-    # a text page is NOT images-only, with or without an image beside it
-    text = _mk_pdf([b"BT (hello) Tj ET"])
-    assert PX.pdf_page_flags(text) == [(True, False)]
-    assert PX.pdf_images_only(text) is False
-    mixed = _pdf_image_page(b"/Im0 Do BT (caption) Tj ET")
-    assert PX.pdf_page_flags(mixed) == [(True, True)]
-    assert PX.pdf_images_only(mixed) is False
-    # a page that draws NOTHING (truly empty) is not a scan either
-    empty = _mk_pdf([b" "])
-    assert PX.pdf_images_only(empty) is False
-    # malformed/non-PDF degrade
-    assert PX.pdf_page_flags(b"not a pdf") == []
-    assert PX.pdf_images_only(b"") is False
-    # a non-image XObject draw (e.g. a Form) does not count
-    form = _pdf_image_page(b"/Fm1 Do")
-    assert PX.pdf_images_only(form) is False
-
-
-def test_flag_scanned_routes_in_spark(spark):
-    from semtools_spark.operators.parse import flag_scanned
-
-    rows = [
-        ("scan.pdf", _pdf_image_page(b"/Im0 Do")),
-        ("text.pdf", _mk_pdf([b"BT (body text) Tj ET"])),
-        ("page.html", b"<p>hi</p>"),
-        ("null.bin", None),
-    ]
-    df = spark.createDataFrame(rows, "url string, html binary")
-    got = {r.url: r.images_only for r in flag_scanned(df).collect()}
-    assert got == {
-        "scan.pdf": True, "text.pdf": False,
-        "page.html": False, "null.bin": False,
-    }
-
-
-def test_images_only_sees_image_inside_form_xobject():
-    """r8 review: several scan producers wrap the page image in a Form
-    XObject ('q /Fm0 Do Q' with the /Im0 draw inside the form). The
-    image probe must recurse into drawn forms or a genuine scan flags
-    images_only=False — the exact conflation the flag exists to avoid."""
-    form_stream = b"q 612 0 0 792 0 0 cm /Im0 Do Q"
-    data = (
-        b"%PDF-1.4\n"
-        b"1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n"
-        b"2 0 obj << /Type /Pages /Count 1 /Kids [3 0 R] >> endobj\n"
-        b"3 0 obj << /Type /Page /Parent 2 0 R /Resources "
-        b"<< /XObject << /Fm0 5 0 R >> >> /Contents 4 0 R >> endobj\n"
-        b"4 0 obj << /Length 12 >> stream\nq /Fm0 Do Q\nendstream endobj\n"
-        b"5 0 obj << /Subtype /Form /Resources << /XObject << /Im0 6 0 R >> >> "
-        b"/Length " + str(len(form_stream)).encode()
-        + b" >> stream\n" + form_stream + b"\nendstream endobj\n"
-        b"6 0 obj << /Subtype /Image /Width 1 /Height 1 /Length 3 >> "
-        b"stream\n\xff\x00\x7f\nendstream endobj\n"
-    )
-    assert PX.extract_pdf_text(data) == ""
-    assert PX.pdf_page_flags(data) == [(False, True)]
-    assert PX.pdf_images_only(data) is True
-    # a form that draws nothing image-like stays False (and a form
-    # drawing ITSELF must terminate via the depth bound, not hang)
-    self_form = (
-        b"%PDF-1.4\n"
-        b"1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n"
-        b"2 0 obj << /Type /Pages /Count 1 /Kids [3 0 R] >> endobj\n"
-        b"3 0 obj << /Type /Page /Parent 2 0 R /Resources "
-        b"<< /XObject << /Fm0 5 0 R >> >> /Contents 4 0 R >> endobj\n"
-        b"4 0 obj << /Length 8 >> stream\n/Fm0 Do\nendstream endobj\n"
-        b"5 0 obj << /Subtype /Form /Length 8 >> stream\n/Fm0 Do\nendstream endobj\n"
-    )
-    assert PX.pdf_images_only(self_form) is False
-
-
-def test_nested_form_fanout_is_linear_not_exponential():
-    """r8 review: without memoization, k nested forms each drawn N times
-    cost N^k re-scans — a few-KB document worth minutes of CPU. The
-    memoized scan must finish instantly and still answer correctly."""
-    import time
-
-    levels, fanout = 8, 6
-    objs = []
-    # form i draws form i+1 `fanout` times; the LAST level draws nothing
-    for i in range(levels):
-        nxt = f"/F{i + 1} Do " * fanout if i + 1 < levels else ""
-        body = nxt.encode()
-        objs.append(
-            f"{10 + i} 0 obj << /Subtype /Form /Resources << /XObject "
-            f"<< /F{i + 1} {10 + i + 1} 0 R >> >> /Length {len(body)} "
-            f">> stream\n".encode() + body + b"\nendstream endobj\n"
-        )
-    data = (
-        b"%PDF-1.4\n"
-        b"1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n"
-        b"2 0 obj << /Type /Pages /Count 1 /Kids [3 0 R] >> endobj\n"
-        b"3 0 obj << /Type /Page /Parent 2 0 R /Resources "
-        b"<< /XObject << /F0 10 0 R >> >> /Contents 4 0 R >> endobj\n"
-        b"4 0 obj << /Length 7 >> stream\n/F0 Do\nendstream endobj\n"
-        + b"".join(objs)
-    )
-    t0 = time.time()
-    assert PX.pdf_images_only(data) is False
-    assert time.time() - t0 < 2.0  # N^k would be ~minutes
-    # the memo must not mask a real image deep in the chain
-    deep_img = data.replace(
-        b"17 0 obj << /Subtype /Form /Resources << /XObject "
-        b"<< /F8 18 0 R >> >> /Length 0 >> stream\n\nendstream endobj\n",
-        b"17 0 obj << /Subtype /Form /Resources << /XObject "
-        b"<< /F8 18 0 R >> >> /Length 7 >> stream\n/F8 Do\nendstream endobj\n"
-        b"18 0 obj << /Subtype /Image /Length 1 >> stream\nX\nendstream endobj\n",
-    )
-    assert PX.pdf_images_only(deep_img) is True

@@ -3,10 +3,36 @@ candidate generation vs brute force, threshold semantics."""
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
+from hypothesis import Phase, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from semtools_spark.functions.vectors import cosine_distance_expr
 from semtools_spark.operators import dedup, similarity
+
+# Spark-backed hypothesis tests skip the shrink phase: every shrink step
+# is another Spark job, so a failure reports on the unshrunk example.
+NO_SHRINK = (Phase.explicit, Phase.generate)
+
+#: float32 edge values: signed zeros, the smallest denormal, magnitudes
+#: whose products overflow or underflow a double, FLT_MAX, ±inf and NaN
+COSINE_EDGES = (
+    0.0, -0.0, 1e-45, -1e-45, 1e-30, -1e-30, 1e30, -1e30, 3.4e38, -3.4e38,
+    float("inf"), float("-inf"), float("nan"), 1.0, -1.0, 1e16,
+)
+
+#: seeded normal float32 pairs at dim 8: sums whose value depends on the
+#: order of their terms in most rows, unlike hypothesis' simple floats
+COSINE_NORMAL_PAIRS = [
+    tuple(p)
+    for p in np.random.default_rng(20261020)
+    .standard_normal((64, 2, 8))
+    .astype(np.float32)
+    .tolist()
+]
 
 
 def test_int_hyperplane_signature_deterministic(spark, embeddings):
@@ -363,3 +389,70 @@ def test_arrow_catalog_signer_matches_jvm_signature(spark, embeddings):
         assert len({r.lsh_bucket for r in got}) > 1  # not degenerate
         bad = [(r.vec_id, r.lsh_bucket, r.arrow) for r in got if r.lsh_bucket != r.arrow]
         assert not bad, (n_planes, bad[:5])
+
+
+def _cosine_rows(dim):
+    edge = st.one_of(
+        st.sampled_from(COSINE_EDGES),
+        st.none(),
+        st.floats(width=32, allow_nan=True, allow_infinity=True),
+    )
+    plain = st.floats(min_value=-1e3, max_value=1e3, width=32)
+
+    def vec(n):
+        return st.sampled_from([plain, edge, st.one_of(edge, plain)]).flatmap(
+            lambda e: st.lists(e, min_size=n, max_size=n)
+        )
+
+    def pair(n):
+        # k = 0 / 1 makes a / b a NULL array, k = 2 gives the two arrays
+        # different lengths; otherwise both have length n
+        return st.tuples(vec(n), vec(n), vec(dim + 1), st.integers(0, 7)).map(
+            lambda t: (
+                None if t[3] == 0 else t[0],
+                None if t[3] == 1 else t[2] if t[3] == 2 else t[1],
+            )
+        )
+
+    # mostly dim-length pairs (the unrolled form), some off by one or
+    # empty (the guard's fold fallback)
+    lengths = st.sampled_from([dim, dim, dim, dim, dim - 1, dim + 1, 0])
+    return st.lists(lengths.flatmap(pair), min_size=8, max_size=40)
+
+
+@settings(
+    max_examples=8, deadline=None, derandomize=True, database=None, phases=NO_SHRINK
+)
+@given(st.sampled_from([8, 3, 1]).flatmap(lambda d: st.tuples(st.just(d), _cosine_rows(d))))
+@example((3, [
+    ([1e16, 1.0, 1.0], [1.0, 1.0, 1.0]),  # the summation order shows
+    ([1e30, -1e30, 1.0], [1.0, 1.0, 1.0]),
+    ([3.4e38, 3.4e38, 1.0], [1.0, 1e-45, -0.0]),
+    ([float("nan"), 1.0, 1.0], [1.0, None, 1.0]),
+    ([float("inf"), 0.0, 0.0], [float("-inf"), 0.0, 0.0]),
+    ([1.0, 2.0], [1.0, 2.0]),  # shorter than dim
+    ([1.0, 2.0, 3.0, 4.0], [1.0, 2.0, 3.0, 4.0]),  # longer than dim
+    (None, [1.0, 2.0, 3.0]),
+]))
+@example((8, COSINE_NORMAL_PAIRS))
+def test_cosine_unrolled_equals_fold_on_adversarial_rows(spark, case):
+    """cosine_distance_expr(dim=d) — the unrolled whole-stage-codegen form
+    with its length guard — equals the sequential fold (dim=None) row for
+    row on signed zeros, denormals, overflowing and infinite magnitudes,
+    NaN, NULL elements, NULL arrays and arrays whose length is not d.
+    NaN results compare equal whatever their sign bit."""
+    dim, rows = case
+    df = spark.createDataFrame(rows, "a array<float>, b array<float>")
+    got = df.select(
+        cosine_distance_expr("a", "b").alias("fold"),
+        cosine_distance_expr("a", "b", dim=dim).alias("unrolled"),
+    ).collect()
+
+    def same(x, y):
+        if x is None or y is None:
+            return x is y
+        return (math.isnan(x) and math.isnan(y)) or x == y
+
+    bad = [(row, r.fold, r.unrolled) for row, r in zip(rows, got)
+           if not same(r.fold, r.unrolled)]
+    assert not bad, (dim, bad[:5])

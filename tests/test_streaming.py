@@ -52,108 +52,32 @@ def test_streaming_incremental_sync(spark, tmp_path):
     assert os.path.isdir(ckpt)
 
 
-def test_windowed_event_stats_stream_matches_batch(spark, tmp_path):
-    """Watermarked tumbling-window aggregation over a streamed event drop
-    equals the same expressions run as a batch query — one aggregation
-    shape, two execution modes."""
-    from pyspark.sql import types as T
-
-    from semtools_spark.streaming.windows import (
-        run_windowed_stats_available,
-        windowed_event_stats,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType(), False),
-            T.StructField("event_type", T.StringType(), False),
-            T.StructField("value", T.DoubleType(), False),
-        ]
-    )
+def test_windowed_event_stats_hourly_totals(spark):
+    """The events_hourly window stats on a batch relation equal a
+    Python tally: per (hour, event_type) the event count and the sum of
+    floor(value·100)."""
     import datetime as dt
+    import math
+
+    from semtools_spark.streaming.windows import windowed_event_stats
 
     base = dt.datetime(2026, 1, 1, 10, 0, 0)
     rows = [
-        (base + dt.timedelta(minutes=m), etype, float(m) / 7 + 0.5)
+        (base + dt.timedelta(minutes=m), etype, m / 7 + 0.5)
         for m in range(0, 150, 5)
         for etype in ("click", "view")
     ]
-    src = str(tmp_path / "events_stream")
-    df = spark.createDataFrame(rows, schema)
-    df.coalesce(2).write.mode("append").parquet(src)
-
-    got = run_windowed_stats_available(
-        spark, src, str(tmp_path / "ckpt"), schema, query_name="wes_test"
-    )
-    want = windowed_event_stats(spark.read.schema(schema).parquet(src))
-    g = {tuple(r) for r in got.collect()}
-    w = {tuple(r) for r in want.collect()}
-    assert g == w and len(g) == 6  # 3 hourly windows x 2 event types
-
-
-def test_windowed_stats_append_mode_emits_each_window_exactly_once(spark, tmp_path):
-    """VERDICT r5 wrong #4: the module docstring claims append-mode
-    exactly-once emission but only complete mode was exercised. Pin the
-    claim: a window's row appears in the sink only after the watermark
-    passes its end, and is never re-emitted by later drains."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from semtools_spark.streaming.windows import run_windowed_stats_append
-
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType(), False),
-            T.StructField("event_type", T.StringType(), False),
-            T.StructField("value", T.DoubleType(), False),
-        ]
-    )
-    src = str(tmp_path / "events_src")
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "sink")
-    base = dt.datetime(2026, 1, 1, 10, 0, 0)
-
-    def drop(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    def drain():
-        return run_windowed_stats_append(spark, src, ckpt, out, schema)
-
-    # batch 1: events inside [10:00, 11:00) only — the watermark
-    # (max ts - 30 min) has not passed the window end, so NOTHING emits
-    drop([(base + dt.timedelta(minutes=m), "click", 1.0) for m in (0, 10, 20)])
-    assert drain().count() == 0
-
-    # batch 2: an event at 12:00 pushes the watermark to 11:30 > 11:00 —
-    # the first window emits EXACTLY once, with its final totals
-    drop([(base + dt.timedelta(hours=2), "click", 1.0)])
-    got = drain().collect()
-    assert len(got) == 1
-    r = got[0]
-    assert (
-        r.window_start == base
-        and r.event_type == "click"
-        and r.n == 3
-        and r.sum_value_centi == 300
-    )
-
-    # batch 3: more late-window-2 traffic — the closed first window is
-    # NOT re-emitted, and [12:00, 13:00) is still open (watermark 11:45)
-    drop([(base + dt.timedelta(hours=2, minutes=15), "click", 1.0)])
-    again = drain().collect()
-    assert len(again) == 1 and again[0].window_start == base
-
-    # batch 4: advance past 13:00 → the second window closes with BOTH
-    # its events; the first window's row count is still exactly one
-    drop([(base + dt.timedelta(hours=3, minutes=45), "view", 2.0)])
-    final = {(r.window_start, r.event_type, r.n) for r in drain().collect()}
-    assert final == {
-        (base, "click", 3),
-        (base + dt.timedelta(hours=2), "click", 2),
+    want: dict = {}
+    for ts, etype, v in rows:
+        key = (ts.replace(minute=0), etype)
+        n, total = want.get(key, (0, 0))
+        want[key] = (n + 1, total + math.floor(v * 100))
+    df = spark.createDataFrame(rows, "ts timestamp, event_type string, value double")
+    got = {
+        (r.window_start, r.event_type): (r.n, r.sum_value_centi)
+        for r in windowed_event_stats(df).collect()
     }
+    assert got == want and len(got) == 6  # 3 hourly windows x 2 event types
 
 
 def test_stateful_stream_sessionization(spark, tmp_path):

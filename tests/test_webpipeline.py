@@ -9,11 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from semtools_spark.operators.parse import (
-    parse_incremental,
-    parse_pages,
-    passthrough_predicate,
-)
+from semtools_spark.operators.parse import parse_pages, passthrough_predicate
 from semtools_spark.pipeline import StageFailure, run_webkg_pipeline
 from semtools_spark.sources.web_pages import generate_web_pages, write_web_pages
 
@@ -56,29 +52,6 @@ def test_extraction_byte_identical_per_url(spark, pages_path):
     # both branches are non-trivially exercised
     n_pass = pages.filter(passthrough_predicate()).count()
     assert 0 < n_pass < N_PAGES
-
-
-def test_parse_incremental_anti_join(spark, pages_path):
-    pages = spark.read.parquet(pages_path)
-    full_manifest = pages.select(
-        "url", F.octet_length("html").alias("size_bytes"), "warc_ts"
-    )
-    # manifest covering all but 10 urls → exactly those 10 re-parse
-    manifest = full_manifest.filter(F.xxhash64("url") % 30 != 0)
-    n_expected = N_PAGES - manifest.count()
-    parsed, new_rows = parse_incremental(pages, manifest)
-    assert parsed.count() == n_expected
-    assert new_rows.count() == n_expected
-    # changed page (size drift) re-parses even when the url is present
-    drifted = full_manifest.withColumn(
-        "size_bytes",
-        F.when(F.xxhash64("url") % 7 == 0, F.col("size_bytes") + 1).otherwise(
-            F.col("size_bytes")
-        ),
-    )
-    n_drift = full_manifest.join(drifted, ["url", "size_bytes", "warc_ts"], "left_anti").count()
-    parsed2, _ = parse_incremental(pages, drifted)
-    assert parsed2.count() == n_drift > 0
 
 
 def test_pipeline_matches_golden_fixture(spark, pages_path, tmp_path):

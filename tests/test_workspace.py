@@ -158,17 +158,6 @@ def test_prune_without_driver_collect(spark, tmp_path):
     assert ws.stats()["total_lines"] == 4
 
 
-def test_stdin_adhoc_source_searchable(spark):
-    """S11: one stdin-style ad-hoc doc flows through the search path."""
-    from semtools_spark.operators.search import search
-    from semtools_spark.sources.adhoc import single_doc
-
-    d = single_doc(spark, "alpha beta\nspark join vector\nomega")
-    res = search(d, "spark join vector", top_k=1, n_lines=0).collect()
-    assert len(res) == 1
-    assert res[0].doc == "<stdin>" and res[0].match_line == 1
-
-
 def test_workspace_json_surfaces(spark, tmp_path):
     """WorkspaceOutput / PruneOutput JSON payloads (reference
     json_mode.rs:40-51) carry live store counts."""
@@ -297,15 +286,30 @@ def test_configless_populated_workspace_refuses_open(spark, tmp_path, docs):
     """A workspace with data tables but a missing config (crashed config
     rewrite / hand-deleted file) is corruption: reopening must refuse
     loudly rather than adopt the caller's dim/seed over incompatible
-    stored vectors (ADVICE r3)."""
+    stored vectors (ADVICE r3). A config without n_buckets (written
+    before bucketing, so its tables are unbucketed) refuses too, and
+    the open rewrites nothing."""
+    import json
     import os
+
+    from semtools_spark import fs as hfs
 
     root = str(tmp_path / "ws_noconf")
     ws = W.Workspace(spark, root, dim=32)
     ws.sync(docs)
+    cfg_path = f"{root}/{W.Workspace.CONFIG_FILE}"
+    cfg = json.loads(hfs.read_text(spark, cfg_path))
     os.remove(os.path.join(root, W.Workspace.CONFIG_FILE))
     with pytest.raises(IOError, match="no workspace.json"):
         W.Workspace(spark, root, dim=64)
+
+    del cfg["n_buckets"]
+    hfs.write_text(spark, cfg_path, json.dumps(cfg))
+    listing = sorted(os.listdir(root))
+    with pytest.raises(IOError, match="no n_buckets"):
+        W.Workspace(spark, root)
+    assert sorted(os.listdir(root)) == listing
+    assert json.loads(hfs.read_text(spark, cfg_path)) == cfg
 
 
 def _bucket_files(root, table):
@@ -475,60 +479,69 @@ def test_workspace_ann_index_search_and_staleness(spark, tmp_path):
 
 
 def test_bucketed_merge_equivalent_to_legacy_under_random_ops(spark, tmp_path):
-    """Differential test of the r4 bucket-scoped MERGE: a seeded random
-    sequence of upserts and deletes applied to a bucketed table and to a
-    legacy whole-table layout must produce identical final contents —
-    the bucketing is physical layout only, never semantics."""
+    """Differential test of the bucket-scoped MERGE: a seeded random
+    sequence of upserts and deletes applied to a bucketed table must
+    match a pure-Python dict model of the same sequence after every
+    step — the bucketing is physical layout only, never semantics."""
     import random
 
     rng = random.Random(20260817)
-    leg = str(tmp_path / "legacy_t")
     buck = str(tmp_path / "bucketed_t")
     key_space = list(range(60))
-
-    def make_updates(n):
-        ks = rng.sample(key_space, n)
-        return spark.createDataFrame(
-            [(k, f"v{rng.randint(0, 999)}", rng.randint(0, 9)) for k in ks],
-            "doc long, payload string, rev long",
-        )
+    model: dict[int, tuple[str, int]] = {}
 
     for step in range(8):
         if step % 3 == 2:
             ks = rng.sample(key_space, rng.randint(1, 8))
             keys = spark.createDataFrame([(k,) for k in ks], "doc long")
-            n_leg = W.delete_keys(spark, leg, keys, ("doc",))
             n_buck = W.delete_keys(spark, buck, keys, ("doc",), num_buckets=8)
-            assert n_leg == n_buck, (step, n_leg, n_buck)
+            n_model = sum(model.pop(k, None) is not None for k in ks)
+            assert n_buck == n_model, (step, n_buck, n_model)
         else:
-            upd = make_updates(rng.randint(1, 12))
-            W.merge_upsert(spark, leg, upd, ("doc",))
+            rows = [
+                (k, f"v{rng.randint(0, 999)}", rng.randint(0, 9))
+                for k in rng.sample(key_space, rng.randint(1, 12))
+            ]
+            upd = spark.createDataFrame(rows, "doc long, payload string, rev long")
             W.merge_upsert(spark, buck, upd, ("doc",), num_buckets=8)
-        a = spark.read.parquet(leg).select("doc", "payload", "rev")
-        b = spark.read.parquet(buck).drop(W.BUCKET_COL).select(
-            "doc", "payload", "rev"
+            model.update((k, (p, r)) for k, p, r in rows)
+        got = sorted(
+            tuple(r)
+            for r in spark.read.parquet(buck).select("doc", "payload", "rev").collect()
         )
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, step
-    # the bucketed side really is bucketed (not silently legacy)
+        assert got == sorted((k, p, r) for k, (p, r) in model.items()), step
+    # the table really is bucketed
     assert W._bucket_ids(spark, buck)
 
 
-def test_legacy_table_migrates_to_bucketed_on_first_bucketed_merge(spark, tmp_path):
-    """A pre-r4 unbucketed table transparently migrates to the bucketed
-    layout on its first num_buckets MERGE, preserving all rows."""
-    t = str(tmp_path / "legacy_mig")
-    first = spark.createDataFrame(
+def test_unbucketed_table_refused_and_left_untouched(spark, tmp_path):
+    """merge_upsert and delete_keys maintain only the bucketed layout: on
+    a pointer-less unbucketed parquet table both raise, and its files
+    stay byte-identical (nothing is migrated or rewritten)."""
+    import os
+
+    t = str(tmp_path / "flat_t")
+    spark.createDataFrame(
         [(i, f"p{i}") for i in range(20)], "doc long, payload string"
-    )
-    W.merge_upsert(spark, t, first, ("doc",))  # legacy layout
-    assert not W._bucket_ids(spark, t)
-    upd = spark.createDataFrame([(3, "CHANGED"), (99, "NEW")],
-                                "doc long, payload string")
-    W.merge_upsert(spark, t, upd, ("doc",), num_buckets=8)
-    assert W._bucket_ids(spark, t)  # migrated
-    got = {r.doc: r.payload for r in
-           spark.read.parquet(t).drop(W.BUCKET_COL).collect()}
-    assert len(got) == 21 and got[3] == "CHANGED" and got[99] == "NEW"
+    ).write.parquet(t)
+
+    def files():
+        out = {}
+        for dirpath, _dirs, names in os.walk(t):
+            for n in names:
+                with open(os.path.join(dirpath, n), "rb") as fh:
+                    out[os.path.relpath(os.path.join(dirpath, n), t)] = fh.read()
+        return out
+
+    before = files()
+    upd = spark.createDataFrame([(3, "CHANGED")], "doc long, payload string")
+    with pytest.raises(IOError, match="unbucketed"):
+        W.merge_upsert(spark, t, upd, ("doc",), num_buckets=8)
+    keys = spark.createDataFrame([(3,)], "doc long")
+    with pytest.raises(IOError, match="unbucketed"):
+        W.delete_keys(spark, t, keys, ("doc",), num_buckets=8)
+    assert files() == before
+    assert sorted(os.listdir(tmp_path)) == ["flat_t"]
 
 
 def test_agent_search_on_empty_workspace(spark, tmp_path):
