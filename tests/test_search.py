@@ -79,14 +79,6 @@ def test_case_insensitive_embeds_lower_but_returns_original(spark, docs):
 def test_empty_corpus_returns_empty(spark):
     empty = spark.createDataFrame([], "doc_id long, text string")
     assert S.search(empty, "anything", top_k=3).count() == 0
-    # the other corpus edge: one ad-hoc document under a string key (the
-    # reference names stdin input "<stdin>", cmds/search.rs:144-176)
-    one = spark.createDataFrame(
-        [("<stdin>", "alpha beta\nspark join vector\nomega")],
-        "doc_id string, text string",
-    )
-    res = S.search(one, "spark join vector", top_k=1, n_lines=0).collect()
-    assert [(r.doc, r.match_line) for r in res] == [("<stdin>", 1)]
 
 
 def test_deterministic_tiebreak(spark, docs):

@@ -158,6 +158,21 @@ def test_prune_without_driver_collect(spark, tmp_path):
     assert ws.stats()["total_lines"] == 4
 
 
+def test_stdin_adhoc_source_searchable(spark):
+    """S11: one stdin-style ad-hoc doc (the reference names stdin input
+    "<stdin>", cmds/search.rs:144-176) flows through the search path under
+    a string key."""
+    from semtools_spark.operators.search import search
+
+    d = spark.createDataFrame(
+        [("<stdin>", "alpha beta\nspark join vector\nomega")],
+        "doc_id string, text string",
+    )
+    res = search(d, "spark join vector", top_k=1, n_lines=0).collect()
+    assert len(res) == 1
+    assert res[0].doc == "<stdin>" and res[0].match_line == 1
+
+
 def test_workspace_json_surfaces(spark, tmp_path):
     """WorkspaceOutput / PruneOutput JSON payloads (reference
     json_mode.rs:40-51) carry live store counts."""
