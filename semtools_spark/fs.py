@@ -17,6 +17,7 @@ layer does not change any operator.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 
@@ -108,13 +109,28 @@ def create_exclusive(spark: SparkSession, path: str, text: str) -> bool:
 
 
 def read_text(spark: SparkSession, path: str) -> str | None:
-    """Contents of a small text file, or None if it does not exist."""
+    """Contents of a small text file, or None if it does not exist.
+
+    The local filesystem verifies each read against a ``.<name>.crc``
+    sidecar; a file rewritten outside the Hadoop API (a hand edit, plain
+    ``open()``) no longer matches it. That mismatch raises an ``IOError``
+    naming the file and its stale sidecar, not a bare py4j error."""
     fs, p = fs_and_path(spark, path)
     if not fs.exists(p):
         return None
     stream = fs.open(p)
     try:
         return spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    except Py4JJavaError as ex:
+        cls = ex.java_exception.getClass().getName()
+        if cls != "org.apache.hadoop.fs.ChecksumException":
+            raise
+        crc = f"{p.getParent()}/.{p.getName()}.crc"
+        raise IOError(
+            f"{path} does not match its checksum sidecar {crc}: the file was "
+            f"rewritten outside the Hadoop API; restore it, or delete {crc} "
+            "to accept its current content"
+        ) from ex
     finally:
         stream.close()
 

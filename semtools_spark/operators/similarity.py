@@ -341,16 +341,24 @@ def ivf_build_index(
     re-assignment scan of the corpus per query (the reference persists
     its HNSW index the same way, store.rs:146-177). Build is one map-only
     pass + one shuffle-free partitioned write."""
-    import json
-
-    from semtools_spark import fs as hfs
-
-    spark = emb.sparkSession
     cents = ivf_centroids(n_centroids, dim, seed) if centroids is None else centroids
     assigned = ivf_assign(
         emb, n_centroids, dim, seed, id_col, vec_col, centroids=cents
     )
     assigned.write.mode("overwrite").partitionBy("centroid_id").parquet(index_path)
+    ivf_write_meta(emb.sparkSession, index_path, n_centroids, dim, seed, cents)
+    return index_path
+
+
+def ivf_write_meta(
+    spark, index_path: str, n_centroids: int, dim: int, seed: int, centroids: np.ndarray
+) -> None:
+    """Write the ``_ivf_meta.json`` codebook sidecar of an index at
+    ``index_path`` (read back by :func:`ivf_read_meta`)."""
+    import json
+
+    from semtools_spark import fs as hfs
+
     hfs.write_text(
         spark,
         f"{index_path}/{IVF_META_FILE}",
@@ -361,11 +369,10 @@ def ivf_build_index(
                 "seed": seed,
                 # json floats round-trip exactly (repr-based) — the probe
                 # step recomputes distances against bit-identical centroids
-                "centroids": [[float(x) for x in c] for c in cents],
+                "centroids": [[float(x) for x in c] for c in centroids],
             }
         ),
     )
-    return index_path
 
 
 def ivf_read_meta(spark, index_path: str) -> dict:

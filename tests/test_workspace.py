@@ -21,6 +21,32 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string, mtime long")
 
 
+def _inject_crashes(monkeypatch, exempt=lambda args: False):
+    """Route every hfs rename/write_text/delete through one IO counter.
+    While ``ops["budget"]`` is None the calls are only counted (a dry
+    run sizes a sweep); once it is set, the call that would exceed it
+    raises "injected crash" — the kill point of one sweep iteration.
+    Calls whose positional args ``exempt`` accepts are neither counted
+    nor killed."""
+    from semtools_spark import fs as hfs
+
+    ops = {"n": 0, "budget": None}
+
+    def wrap(fn):
+        def _w(spark_, *a, **kw):
+            if not exempt(a):
+                if ops["budget"] is not None and ops["n"] >= ops["budget"]:
+                    raise RuntimeError("injected crash")
+                ops["n"] += 1
+            return fn(spark_, *a, **kw)
+
+        return _w
+
+    for name in ("rename", "write_text", "delete"):
+        monkeypatch.setattr(hfs, name, wrap(getattr(hfs, name)))
+    return ops
+
+
 def test_empty_stats(spark, tmp_path):
     ws = W.Workspace(spark, str(tmp_path / "ws"), dim=16)
     assert ws.stats() == {
@@ -64,7 +90,8 @@ def test_version_bump_forces_reembed(spark, tmp_path, docs):
     ws = W.Workspace(spark, str(tmp_path / "ws"), dim=16)
     ws.sync(docs, mtime_col="mtime")
     stale = ws.manifest().withColumn("_version", F.lit(0))
-    W._atomic_overwrite(stale, ws.manifest_path)
+    W.merge_upsert(spark, ws.manifest_path, stale, ("doc",), num_buckets=ws.n_buckets)
+    ws._publish_wsnap()  # readers pair tables by the workspace snapshot
     meta = docs.select(
         F.col("doc_id").alias("doc"),
         F.length("text").cast("long").alias("size_bytes"),
@@ -484,8 +511,8 @@ def test_workspace_ann_index_search_and_staleness(spark, tmp_path):
 
     # an out-of-band table rewrite (no maintenance ran) → stale → exact
     # fallback instead of reading the outdated index
-    W._atomic_overwrite(
-        spark.read.parquet(ws.lines_path), ws.lines_path, partition_by=W.BUCKET_COL
+    W.merge_upsert(
+        spark, ws.lines_path, ws.lines(), ("doc", "line_no"), num_buckets=ws.n_buckets
     )
     assert not ws.ann_index_fresh()
     assert ws.stats()["index_type"] == "exact-cosine"
@@ -698,14 +725,16 @@ def test_reader_snapshot_isolation_mid_multi_bucket_commit(spark, tmp_path, monk
 
 def test_generation_commit_crash_swept_at_every_io_boundary(spark, tmp_path, monkeypatch):
     """Exhaustive crash sweep of the v2 commit: kill the MERGE at every
-    single hfs rename/write/delete boundary in turn. After every kill, a
-    snapshot read must equal EXACTLY the old or the new table content —
+    single hfs rename/write/delete boundary in turn, on an existing
+    table (a pointer commit) and on an absent one (the creating MERGE).
+    After every kill, a snapshot read must equal EXACTLY the old table
+    content (or, for the creation, no table at all) or the new content —
     never a mix, never a loss — and an idempotent re-run must converge
-    to the new content. This is the property the generation pointer
-    exists to provide; the sweep proves it has no bad window."""
+    to the new content, committed under a generation pointer. This is
+    the property the generation pointer exists to provide; the sweep
+    proves it has no bad window."""
+    import os
     import shutil
-
-    from semtools_spark import fs as hfs
 
     t = str(tmp_path / "crash_sweep_t")
     first = spark.createDataFrame(
@@ -722,51 +751,48 @@ def test_generation_commit_crash_swept_at_every_io_boundary(spark, tmp_path, mon
             [(i, f"v2-{i}") for i in range(24)], "doc long, payload string"
         )
 
-    real = {"rename": hfs.rename, "write_text": hfs.write_text, "delete": hfs.delete}
+    def reset(start):
+        shutil.rmtree(t, ignore_errors=True)
+        if start is not None:
+            shutil.copytree(start, t)
 
-    # dry run: count the IO boundaries of one full commit
-    ops = {"n": 0, "budget": None}
-
-    def wrap(name):
-        fn = real[name]
-
-        def _w(spark_, *a, **kw):
-            if ops["budget"] is not None:
-                if ops["n"] >= ops["budget"]:
-                    raise RuntimeError("injected crash")
-            ops["n"] += 1
-            return fn(spark_, *a, **kw)
-
-        return _w
-
-    for name in real:
-        monkeypatch.setattr(hfs, name, wrap(name))
-    W.merge_upsert(spark, t, upd(), ("doc",), num_buckets=4)
-    total_ops = ops["n"]
-    assert total_ops > 4, total_ops
+    ops = _inject_crashes(monkeypatch)
 
     def read_rows():
+        if not os.path.exists(t):
+            return None  # no table: the state before a creating MERGE
         return {tuple(r) for r in W._read_snapshot(spark, t).drop(W.BUCKET_COL).collect()}
 
     mixes = []
-    for k in range(total_ops):
-        shutil.rmtree(t, ignore_errors=True)
-        shutil.copytree(pristine, t)
-        ops["n"], ops["budget"] = 0, k
-        try:
-            W.merge_upsert(spark, t, upd(), ("doc",), num_buckets=4)
-            crashed = False
-        except RuntimeError:
-            crashed = True
-        ops["budget"] = None
-        got = read_rows()
-        if got not in (old_rows, new_rows):
-            mixes.append((k, crashed, sorted(got)[:4]))
-            continue
-        # recovery: the idempotent re-run converges to the new content
-        ops["n"] = 0
+    # (table before the MERGE, its rows): an update, then the creation
+    for start, before in ((pristine, old_rows), (None, None)):
+        # dry run: count the IO boundaries of one full commit
+        reset(start)
+        ops["n"], ops["budget"] = 0, None
         W.merge_upsert(spark, t, upd(), ("doc",), num_buckets=4)
-        assert read_rows() == new_rows, f"crash point {k}: re-run did not converge"
+        total_ops = ops["n"]
+        assert total_ops > 4, total_ops
+
+        for k in range(total_ops):
+            reset(start)
+            ops["n"], ops["budget"] = 0, k
+            try:
+                W.merge_upsert(spark, t, upd(), ("doc",), num_buckets=4)
+                crashed = False
+            except RuntimeError:
+                crashed = True
+            ops["budget"] = None
+            got = read_rows()
+            if got not in (before, new_rows):
+                mixes.append((start, k, crashed, got if got is None else sorted(got)[:4]))
+                continue
+            # recovery: the idempotent re-run converges to the new content
+            ops["n"] = 0
+            W.merge_upsert(spark, t, upd(), ("doc",), num_buckets=4)
+            assert read_rows() == new_rows, f"crash point {k}: re-run did not converge"
+            assert W._gen_pointer(spark, t) is not None, (
+                f"crash point {k}: re-run left the table without a pointer"
+            )
     assert not mixes, f"inconsistent snapshots at crash points: {mixes}"
 
 
@@ -781,8 +807,6 @@ def test_delete_all_keys_crash_sweep_never_bricks_table(spark, tmp_path, monkeyp
     converge to table-removed."""
     import os
     import shutil
-
-    from semtools_spark import fs as hfs
 
     t = str(tmp_path / "delete_all_t")
     rows = [(i, f"v-{i}") for i in range(24)]
@@ -802,23 +826,7 @@ def test_delete_all_keys_crash_sweep_never_bricks_table(spark, tmp_path, monkeyp
     pristine = str(tmp_path / "delete_all_pristine")
     shutil.copytree(t, pristine)
     old_rows = set(rows)
-
-    real = {"rename": hfs.rename, "write_text": hfs.write_text, "delete": hfs.delete}
-    ops = {"n": 0, "budget": None}
-
-    def wrap(name):
-        fn = real[name]
-
-        def _w(spark_, *a, **kw):
-            if ops["budget"] is not None and ops["n"] >= ops["budget"]:
-                raise RuntimeError("injected crash")
-            ops["n"] += 1
-            return fn(spark_, *a, **kw)
-
-        return _w
-
-    for name in real:
-        monkeypatch.setattr(hfs, name, wrap(name))
+    ops = _inject_crashes(monkeypatch)
 
     # dry run: count the IO boundaries of one full delete-everything
     assert W.delete_keys(spark, t, keys, ("doc",), num_buckets=4) == 24
@@ -1097,8 +1105,6 @@ def test_workspace_mutation_crash_sweep_pairs_tables(spark, tmp_path, monkeypatc
     independent."""
     import shutil
 
-    from semtools_spark import fs as hfs
-
     root = str(tmp_path / "ws_sweep_pair")
     docs_v1 = spark.createDataFrame(
         [(i, f"alpha v1 doc {i}\nsecond line {i}", 100 + i) for i in range(6)],
@@ -1122,28 +1128,12 @@ def test_workspace_mutation_crash_sweep_pairs_tables(spark, tmp_path, monkeypatc
 
     old_pair = pairing()
 
-    real = {"rename": hfs.rename, "write_text": hfs.write_text, "delete": hfs.delete}
-    ops = {"n": 0, "budget": None}
-
     def _lease_io(args) -> bool:
         return any(
             isinstance(a, str) and ("_writer." in a) for a in args
         )
 
-    def wrap(name):
-        fn = real[name]
-
-        def _w(spark_, *a, **kw):
-            if not _lease_io(a):
-                if ops["budget"] is not None and ops["n"] >= ops["budget"]:
-                    raise RuntimeError("injected crash")
-                ops["n"] += 1
-            return fn(spark_, *a, **kw)
-
-        return _w
-
-    for name in real:
-        monkeypatch.setattr(hfs, name, wrap(name))
+    ops = _inject_crashes(monkeypatch, exempt=_lease_io)
 
     # dry run: count the countable IO boundaries of one full mutation
     W.Workspace(spark, root, dim=8, n_buckets=2).sync(docs_v2, mtime_col="mtime")
@@ -1180,6 +1170,50 @@ def test_workspace_mutation_crash_sweep_pairs_tables(spark, tmp_path, monkeypatc
         W.Workspace(spark, root, dim=8, n_buckets=2).sync(docs_v2, mtime_col="mtime")
         assert pairing() == new_pair, f"crash point {k}: re-run did not converge"
     assert not mixes, f"inconsistent pairings at crash points: {mixes}"
+
+
+def test_first_sync_crash_at_lines_pointer_publish_converges(spark, tmp_path, monkeypatch):
+    """A first sync killed at the lines table's first pointer publish,
+    then re-run, must leave the workspace as a clean first sync does:
+    same lines, line count and search hits. A table left on disk
+    without its pointer would be pinned as absent by the workspace
+    snapshot, hiding every line while the manifest lists every doc."""
+    from semtools_spark import fs as hfs
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha v1 doc {i}\nsecond line {i}", 100 + i) for i in range(6)],
+        "doc_id long, text string, mtime long",
+    )
+
+    def state(w):
+        lines = w.lines()
+        return (
+            None if lines is None
+            else sorted(tuple(r) for r in lines.select("doc", "line_no", "line").collect()),
+            w.stats()["total_lines"],
+            [tuple(r) for r in w.search("alpha v1 doc 3", top_k=3).collect()],
+        )
+
+    clean = W.Workspace(spark, str(tmp_path / "ws_first_clean"), dim=8, n_buckets=2)
+    clean.sync(docs, mtime_col="mtime")
+
+    ws = W.Workspace(spark, str(tmp_path / "ws_first_crash"), dim=8, n_buckets=2)
+    real_rename = hfs.rename
+
+    def crash_at_first_lines_pointer(spark_, src, dst):
+        if "line_embeddings.parquet" in dst and dst.endswith(
+            f"/{W._POINTER_PREFIX}0.json"
+        ):
+            raise RuntimeError("injected crash at the first pointer publish")
+        return real_rename(spark_, src, dst)
+
+    monkeypatch.setattr(hfs, "rename", crash_at_first_lines_pointer)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        ws.sync(docs, mtime_col="mtime")
+    monkeypatch.setattr(hfs, "rename", real_rename)
+
+    assert ws.sync(docs, mtime_col="mtime") == {"new": 6}
+    assert state(ws) == state(clean)
 
 
 def test_stale_lease_reclaim_is_atomic_tombstone(spark, tmp_path, docs, monkeypatch):
@@ -1280,6 +1314,26 @@ def test_create_exclusive_propagates_infrastructure_errors(spark, tmp_path):
         hfs.create_exclusive(spark, "/proc/semtools_lease_probe", "y")
 
 
+def test_config_rewritten_outside_hadoop_names_stale_crc(spark, tmp_path):
+    """A workspace.json rewritten with plain open() no longer matches the
+    .workspace.json.crc sidecar the local filesystem checks reads
+    against. With checksum verification left on, opening the workspace
+    must raise an IOError naming the file and the stale sidecar, not a
+    bare py4j error."""
+    import json
+    import os
+
+    root = str(tmp_path / "ws_crc")
+    W.Workspace(spark, root, dim=16)
+    cfg_file = os.path.join(root, W.Workspace.CONFIG_FILE)
+    with open(cfg_file) as fh:
+        cfg = json.load(fh)
+    with open(cfg_file, "w") as fh:
+        json.dump(cfg, fh, indent=2)
+    with pytest.raises(IOError, match=r"workspace\.json .*\.workspace\.json\.crc"):
+        W.Workspace(spark, root)
+
+
 def test_delete_with_keys_derived_from_workspace_tables(spark, tmp_path, docs):
     """A keys DataFrame built from the workspace's own manifest (the
     natural distributed-caller pattern) must survive the manifest delete
@@ -1296,12 +1350,14 @@ def test_delete_with_keys_derived_from_workspace_tables(spark, tmp_path, docs):
 
 
 def test_open_time_repair_skipped_under_live_foreign_lease(spark, tmp_path, docs):
-    """Open-time repair must not roll back a LIVE writer's in-flight
-    swap: a reader opening mid-swap (bucket momentarily moved aside,
-    live foreign lease present) leaves the .__old_ dir alone and does
-    not raise; once the lease goes stale (the writer actually crashed),
-    the next open rolls the bucket back as usual."""
+    """Open-time repair must not sweep a LIVE writer's in-flight commit:
+    a reader opening mid-commit (the writer's .__intent_ file and one
+    staged g_ generation on disk, live foreign lease present) leaves
+    both alone and does not raise; once the lease goes stale (the
+    writer actually crashed), the next open sweeps them as usual."""
     import json
+    import os
+    import shutil
     import time
 
     from semtools_spark import fs as hfs
@@ -1311,21 +1367,25 @@ def test_open_time_repair_skipped_under_live_foreign_lease(spark, tmp_path, docs
     ws.sync(docs, mtime_col="mtime")
     before = {tuple(r) for r in ws.lines().select("doc", "line_no", "line").collect()}
 
-    # simulate a writer mid-swap: one bucket moved aside exactly as
-    # _swap_buckets does, its destination momentarily missing
+    # simulate a writer mid-commit exactly as _swap_buckets stages one:
+    # intent written, a new generation staged beside the current one,
+    # the pointer not yet published
     k = W._bucket_ids(spark, ws.lines_path)[0]
-    bucket = f"{ws.lines_path}/{W.BUCKET_COL}={k}"
-    old = f"{ws.lines_path}.__old_{'0' * 32}_{W.BUCKET_COL}={k}"
-    assert hfs.rename(spark, bucket, old)
+    frag = f"{W.BUCKET_COL}={k}"
+    run = "0" * 12
+    current = W._gen_pointer(spark, ws.lines_path)[2][str(k)]
+    staged = f"{ws.lines_path}/{frag}/g_{run}"
+    shutil.copytree(os.path.join(ws.lines_path, frag, current), staged)
+    intent = W._write_intent(spark, ws.lines_path, run, W.BUCKET_COL, [frag])
     lease = f"{root}/{W.Workspace.LEASE_FILE}"
     hfs.write_text(spark, lease, json.dumps(
         {"host": "other", "pid": 1, "ts": time.time(), "token": "foreign"}
     ))
 
     W.Workspace(spark, root)  # live lease: no repair, no raise
-    assert hfs.exists(spark, old) and not hfs.exists(spark, bucket)
+    assert hfs.exists(spark, staged) and hfs.exists(spark, intent)
 
-    # the lease expires (writer really is dead): next open repairs
+    # the lease expires (writer really is dead): next open sweeps
     hfs.delete(spark, lease)
     hfs.write_text(spark, lease, json.dumps(
         {"host": "other", "pid": 1,
@@ -1335,7 +1395,7 @@ def test_open_time_repair_skipped_under_live_foreign_lease(spark, tmp_path, docs
     assert {
         tuple(r) for r in ws3.lines().select("doc", "line_no", "line").collect()
     } == before
-    assert not hfs.exists(spark, old)
+    assert not hfs.exists(spark, staged) and not hfs.exists(spark, intent)
 
 
 def test_writer_lease_blocks_live_writer_reclaims_stale(spark, tmp_path, docs):
@@ -1393,26 +1453,63 @@ def test_rebucket_migration_preserves_data_and_merge(spark, tmp_path, docs):
     assert got == ["post-rebucket"]
 
 
-def test_rebucket_crash_is_finished_on_next_open(spark, tmp_path, docs):
+def test_rebucket_crash_is_finished_on_next_open(spark, tmp_path, docs, monkeypatch):
     """A crash mid-rebucket leaves the intent journal; the next open must
-    finish the migration (config count == journal count) — otherwise
-    MERGE computes touched buckets under the wrong modulus and keys stop
-    deduplicating."""
+    finish the migration (config count == journal count, same rows,
+    every row in its new bucket) — otherwise MERGE computes touched
+    buckets under the wrong modulus and keys stop deduplicating. Three
+    crash points: before any rewrite, after the lines commit but before
+    the manifest commit, and after both commits but before the config
+    is saved."""
     import json
 
     from semtools_spark import fs as hfs
 
-    root = str(tmp_path / "ws_rbcrash")
-    ws = W.Workspace(spark, root, dim=16, n_buckets=2)
-    ws.sync(docs, mtime_col="mtime")
-    # simulate: journal written, then crash before any rewrite
-    hfs.write_text(
-        spark, f"{root}/{W.Workspace.REBUCKET_FILE}", json.dumps({"n_buckets": 4})
-    )
-    ws2 = W.Workspace(spark, root)
-    assert ws2.n_buckets == 4
-    assert hfs.read_text(spark, f"{root}/{W.Workspace.REBUCKET_FILE}") is None
-    assert ws2.stats() ["total_lines"] == 4
+    real_swap = W._swap_buckets
+
+    def crash_after_lines_commit(spark_, table_path, *a, **kw):
+        real_swap(spark_, table_path, *a, **kw)
+        if table_path.endswith("line_embeddings.parquet"):
+            raise RuntimeError("injected crash after the lines commit")
+
+    def crash_before_config_save(self):
+        raise RuntimeError("injected crash before the config save")
+
+    def rows(w):
+        return (
+            {tuple(r) for r in w.lines().select("doc", "line_no", "line").collect()},
+            {tuple(r) for r in w.manifest().collect()},
+        )
+
+    for case in ("before_rewrite", "after_lines_commit", "before_config_save"):
+        root = str(tmp_path / f"ws_rbcrash_{case}")
+        ws = W.Workspace(spark, root, dim=16, n_buckets=2)
+        ws.sync(docs, mtime_col="mtime")
+        before = rows(ws)
+        if case == "before_rewrite":
+            # simulate: journal written, then crash before any rewrite
+            hfs.write_text(
+                spark, f"{root}/{W.Workspace.REBUCKET_FILE}",
+                json.dumps({"n_buckets": 4}),
+            )
+        else:
+            with monkeypatch.context() as m:
+                if case == "after_lines_commit":
+                    m.setattr(W, "_swap_buckets", crash_after_lines_commit)
+                else:
+                    m.setattr(W.Workspace, "_save_config", crash_before_config_save)
+                with pytest.raises(RuntimeError, match="injected crash"):
+                    ws.rebucket(4)
+        ws2 = W.Workspace(spark, root)
+        assert ws2.n_buckets == 4, case
+        assert hfs.read_text(spark, f"{root}/{W.Workspace.REBUCKET_FILE}") is None
+        assert ws2.stats() ["total_lines"] == 4
+        assert rows(ws2) == before, case
+        for path in (ws2.lines_path, ws2.manifest_path):
+            misplaced = W._read_snapshot(spark, path).filter(
+                F.col(W.BUCKET_COL) != F.pmod(F.xxhash64("doc"), F.lit(4))
+            )
+            assert misplaced.count() == 0, (case, path)
 
 
 def test_buckets_for_bytes_formula(spark, tmp_path):
@@ -1465,10 +1562,14 @@ def test_ann_index_incremental_delta_byte_identity(spark, tmp_path):
         for d in sorted(os.listdir(idx_root)):
             if d.startswith("centroid_id="):
                 h = hashlib.md5()
-                for f in sorted(os.listdir(os.path.join(idx_root, d))):
-                    h.update(f.encode())
-                    with open(os.path.join(idx_root, d, f), "rb") as fh:
-                        h.update(fh.read())
+                base = os.path.join(idx_root, d)
+                for dirpath, dirs, files in os.walk(base):
+                    dirs.sort()
+                    for f in sorted(files):
+                        path = os.path.join(dirpath, f)
+                        h.update(os.path.relpath(path, base).encode())
+                        with open(path, "rb") as fh:
+                            h.update(fh.read())
                 out[d] = h.hexdigest()
         return out
 
